@@ -1152,11 +1152,10 @@ object SparkEntry {
 
     "dedup_minhash" -> ((s, dir) => {
       // portable arithmetic at the full production parameters (k=64,
-      // 16 bands): md5 shingle hashes mod 2^31-1 + (2j+1)x+c_j
-      // permutations via the imperative MinHashSigAgg, so the ENTIRE
-      // pipeline hash-matches the DuckDB oracle (was rows-only while it
-      // rode xxhash64). The xxhash64 fast path stays the library API
-      // (MinHashDedup.nearDupPairs), accuracy-pinned in MinHashDedupSpec.
+      // 16 bands): md5 shingle hashes mod 2^31-1 through the in-row
+      // squared-constant permutations (graft_minhash_md5), so the ENTIRE
+      // pipeline hash-matches the DuckDB oracle; DedupSpec pins its
+      // recall and estimate error against brute-force Jaccard.
       MinHashDedup.portablePairs(t(s, dir, "documents"), "doc_id", "text",
           n = 3, k = 64, numBands = 16, threshold = 0.5, maxBucket = 500)
         .orderBy(col("id_a"), col("id_b"))
@@ -1230,9 +1229,7 @@ object SparkEntry {
       // the round-5 witness FOLDED INTO the main row: portable 60-bit
       // md5 fingerprints (5 pigeonhole blocks × 12 bits, Hamming ≤ 3) —
       // fingerprints, block keys, and distances all rebuilt and
-      // hash-matched by DuckDB. The xxhash64 native-expression path
-      // (nearDupPairs) stays the library API, verified vs brute-force
-      // Hamming in SimHashDedupSpec.
+      // hash-matched by DuckDB.
       SimHashDedup.portablePairs(t(s, dir, "documents"), "doc_id", "text", maxDist = 3)
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -6016,10 +6013,12 @@ object SparkEntry {
         |  i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2])) AS sh FROM w),
         |h AS (SELECT doc_id, list_transform(sh, t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % 2147483647) AS hs
         |  FROM s WHERE len(sh) > 0),
+        |perm AS (SELECT list_transform(range(0, 64), j -> ((j + 1) * 1103515245 + 12345) % 2147483647) AS c,
+        |  list_transform(range(0, 64), j -> ((j + 7919) * 1103515245 + 104729) % 2147483647) AS d),
         |sig AS (SELECT doc_id,
-        |  list_transform(range(0, 64), j ->
-        |    list_min(list_transform(hs, x -> ((2*j + 1) * x + j * 12345 + 7) % 2147483647))) AS sig
-        |  FROM h),
+        |  list_transform(range(1, 65), j ->
+        |    list_min(list_transform(hs, x -> (c[j] * c[j] % 2147483647 * x + d[j] * d[j] % 2147483647) % 2147483647))) AS sig
+        |  FROM h, perm),
         |banded AS (SELECT doc_id, sig, u.b AS band,
         |  sig[u.b*4+1] || ':' || sig[u.b*4+2] || ':' || sig[u.b*4+3] || ':' || sig[u.b*4+4] AS bkey
         |  FROM sig, LATERAL (SELECT unnest(generate_series(0, 15)) AS b) u),
@@ -6040,10 +6039,12 @@ object SparkEntry {
         |  i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2])) AS sh FROM w),
         |h AS (SELECT doc_id, list_transform(sh, t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % 2147483647) AS hs
         |  FROM s WHERE len(sh) > 0),
+        |perm AS (SELECT list_transform(range(0, 16), j -> ((j + 1) * 1103515245 + 12345) % 2147483647) AS c,
+        |  list_transform(range(0, 16), j -> ((j + 7919) * 1103515245 + 104729) % 2147483647) AS d),
         |sig AS (SELECT doc_id,
-        |  list_transform(range(0, 16), j ->
-        |    list_min(list_transform(hs, x -> ((2*j + 1) * x + j * 12345 + 7) % 2147483647))) AS sig
-        |  FROM h),
+        |  list_transform(range(1, 17), j ->
+        |    list_min(list_transform(hs, x -> (c[j] * c[j] % 2147483647 * x + d[j] * d[j] % 2147483647) % 2147483647))) AS sig
+        |  FROM h, perm),
         |banded AS (SELECT doc_id, sig, u.b AS band,
         |  sig[u.b*4+1] || ':' || sig[u.b*4+2] || ':' || sig[u.b*4+3] || ':' || sig[u.b*4+4] AS bkey
         |  FROM sig, LATERAL (SELECT unnest(generate_series(0, 3)) AS b) u),
@@ -6065,10 +6066,12 @@ object SparkEntry {
         |  i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2])) AS sh FROM w),
         |h AS (SELECT doc_id, list_transform(sh, t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % 2147483647) AS hs
         |  FROM s WHERE len(sh) > 0),
+        |perm AS (SELECT list_transform(range(0, 16), j -> ((j + 1) * 1103515245 + 12345) % 2147483647) AS c,
+        |  list_transform(range(0, 16), j -> ((j + 7919) * 1103515245 + 104729) % 2147483647) AS d),
         |sig AS (SELECT doc_id,
-        |  list_transform(range(0, 16), j ->
-        |    list_min(list_transform(hs, x -> ((2*j + 1) * x + j * 12345 + 7) % 2147483647))) AS sig
-        |  FROM h),
+        |  list_transform(range(1, 17), j ->
+        |    list_min(list_transform(hs, x -> (c[j] * c[j] % 2147483647 * x + d[j] * d[j] % 2147483647) % 2147483647))) AS sig
+        |  FROM h, perm),
         |banded AS (SELECT doc_id, sig, u.b AS band,
         |  sig[u.b*4+1] || ':' || sig[u.b*4+2] || ':' || sig[u.b*4+3] || ':' || sig[u.b*4+4] AS bkey
         |  FROM sig, LATERAL (SELECT unnest(generate_series(0, 3)) AS b) u),

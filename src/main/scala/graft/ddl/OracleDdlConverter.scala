@@ -66,10 +66,6 @@ object OracleDdlConverter {
     }
   }
 
-  /** UDF-friendly total form: the MySQL SQL or null when unsupported. */
-  def convertSqlOrNull(oracleSql: String, segOwner: String): String =
-    convert(oracleSql, segOwner).fold(_ => null, _.sql)
-
   // ---------------------------------------------------------------- parse
 
   /** Oracle `--` line comments die at end-of-line (the reference's

@@ -194,7 +194,4 @@ object TypeConversions {
   )
   def downgradeCollations(ddl: String): String =
     collationDowngrades.foldLeft(ddl) { case (s, (from, to)) => s.replaceAll("(?i)" + from, to) }
-
-  /** C5/C6 composite used by the Debezium envelope writer (K6). */
-  def debeziumTs(c: Column): Column = unix_millis(c.cast(TimestampType))
 }

@@ -52,27 +52,4 @@ object VectorFunctions {
   def l2(a: Column, b: Column): Column =
     sqrt(aggregate(zip_with(toDouble(a), toDouble(b), (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, x) => acc + x))
-
-  /** Random-hyperplane LSH bucket id: sign bits of `nBits` fixed pseudo-
-    * random projections packed into a long. Two near-identical vectors
-    * land in the same bucket with high probability — the bucket-join
-    * candidate generation used by `SimilaritySearch.lshPairs` to avoid
-    * the O(n²) cross join at scale.
-    *
-    * The "random" planes are a deterministic function of (bit, dim) via
-    * a sine-based hash so the bucketing is reproducible with no
-    * broadcast state.
-    */
-  def lshBucket(v: Column, nBits: Int, dim: Int): Column = {
-    val vd = toDouble(v)
-    val bits = (0 until nBits).map { b =>
-      // plane_b[d] = sin(1 + b*dim + d) — fixed, roughly isotropic
-      val proj = aggregate(
-        zip_with(vd, transform(sequence(lit(b * dim + 1), lit(b * dim + dim)), i => sin(i.cast("double"))),
-          (x, p) => x * p),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
 }

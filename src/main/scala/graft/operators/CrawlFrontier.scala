@@ -146,11 +146,12 @@ object CrawlFrontier {
       // upstream task writes one file into every shard dir it touches
       // (tasks × shards tiny files per build/append — the small-file
       // failure mode the probe side then pays on every pruned read)
-      urls.repartition(col("shard"))
-        .write.mode("overwrite").partitionBy("shard").parquet(s"$dir/urls")
-      writeBloom(spark, s"$dir/bloom", urls.select(col("url")), nShards, expectedItems,
-        overwrite = true)
-      urls.unpersist()
+      try {
+        urls.repartition(col("shard"))
+          .write.mode("overwrite").partitionBy("shard").parquet(s"$dir/urls")
+        writeBloom(spark, s"$dir/bloom", urls.select(col("url")), nShards, expectedItems,
+          overwrite = true)
+      } finally urls.unpersist()
       spark.createDataFrame(Seq((nShards, expectedItems)))
         .toDF("n_shards", "expected_items")
         .write.mode("overwrite").parquet(s"$dir/meta")
@@ -187,11 +188,12 @@ object CrawlFrontier {
           shardCol("url", nShards).as("shard")))
       // shard-clustered append — one file per touched shard per batch,
       // not one per (task, shard) pair (see buildIndex)
-      urls.repartition(col("shard"))
-        .write.mode("append").partitionBy("shard").parquet(urlsDir)
-      writeBloom(spark, bloomDir, urls.select(col("url")), nShards, expectedItems,
-        overwrite = false)
-      urls.unpersist()
+      try {
+        urls.repartition(col("shard"))
+          .write.mode("append").partitionBy("shard").parquet(urlsDir)
+        writeBloom(spark, bloomDir, urls.select(col("url")), nShards, expectedItems,
+          overwrite = false)
+      } finally urls.unpersist()
       compactBloom(spark, dir, nShards)
     }
   }
@@ -588,7 +590,7 @@ object CrawlFrontier {
         try rd.read() finally rd.close()
       }.collectFirst { case g if g != null =>
         (g.getInteger("n_shards", 0), g.getLong("expected_items", 0))
-      }.getOrElse(throw new IllegalArgumentException(
+      }.getOrElse(throw new IllegalStateException(
         s"CrawlFrontier: $dir/meta is empty — not a frontier index"))
     }
   }

@@ -46,7 +46,8 @@ object Partitioning {
   /** Eager-terminal companion to [[materializeOnce]] for operators whose
     * OUTPUT is small relative to the corpus (near-dup pair lists, top-k
     * tables, curated survivors): compute the output NOW via an eager
-    * localCheckpoint, then release the pins before returning. Without
+    * localCheckpoint, then release the pins before returning — also
+    * when the checkpoint throws. Without
     * this, a lazy-returning operator's pins outlive the call — the
     * caller cannot unpersist blocks it never saw, and a long-lived
     * session making repeated calls (per-batch percolation, a bench/fuzz
@@ -63,11 +64,8 @@ object Partitioning {
     * intermediates must keep [[materializeOnce]]'s lineage-preserving
     * persist and live inside such an eager scope.
     */
-  def releasePinsAfter(out: DataFrame, pins: DataFrame*): DataFrame = {
-    val eager = out.localCheckpoint(true)
-    pins.foreach(_.unpersist())
-    eager
-  }
+  def releasePinsAfter(out: DataFrame, pins: DataFrame*): DataFrame =
+    try out.localCheckpoint(true) finally pins.foreach(_.unpersist())
 
   /** Salted two-level aggregation for skewed grouping keys (SURVEY.md
     * §4: "skewed keys → salting or AQE skew-join"). A key holding a

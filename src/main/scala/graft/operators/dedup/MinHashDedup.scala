@@ -1,6 +1,6 @@
 package graft.operators.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** MinHash + LSH near-duplicate detection (beyond-parity, SURVEY.md §8):
@@ -8,10 +8,9 @@ import org.apache.spark.sql.functions._
   * Broder/MMDS construction.
   *
   * Scale design:
-  *  - The signature is computed entirely *inside the row* with
-  *    higher-order functions (no explode/groupBy): k permutations of the
-  *    shingle hash set, each a codegen'd `array_min(transform(...))`.
-  *    Zero shuffles until banding.
+  *  - The signature is computed entirely *inside the row* by the fused
+  *    `graft_minhash_md5` kernel (no explode/groupBy). Zero shuffles
+  *    until banding.
   *  - Banding explodes to `numBands` rows/doc (not #shingles rows/doc)
   *    and joins on the band hash — the only shuffle, hash-partitioned,
   *    and bucket sizes are capped (`maxBucket`) to guard quadratic skew
@@ -21,49 +20,18 @@ import org.apache.spark.sql.functions._
   */
 object MinHashDedup {
 
-  private val P = 2305843009213693951L // 2^61 - 1, Mersenne prime
-
-  /** Portable MinHash+LSH near-dup pairs: identical construction to the
-    * fast path, but every hash is exact in plain 64-bit arithmetic —
-    * 60-bit md5 shingle hashes reduced mod 2^31-1, permutations
-    * `(2j+1)·x + c_j mod 2^31-1` (products < 2^62, no wraparound) — so
-    * an ANSI engine reproduces the ENTIRE pipeline bit-for-bit: the
-    * DuckDB oracles hash-match banding, buckets, and
-    * signature-agreement scores. This is now the MAIN `dedup_minhash`
-    * driver query at the full production parameters (k=64, 16 bands,
-    * via the portable-mode imperative [[graft.functions.MinHashSigAgg]])
-    * plus the smaller `dedup_minhash_md5` config (k=16, 4 bands); the
-    * xxhash64 path ([[nearDupPairs]]) stays the fastest library form,
-    * accuracy-pinned against brute-force Jaccard in MinHashDedupSpec.
-    *
-    * Shape notes: shingle hashes are computed ONCE on exploded rows and
-    * consumed by k `min` aggregates — aggregates evaluate their child
-    * projection per input row, so the k branches cannot re-inline the
-    * md5 subtree (the CollapseProject k× re-evaluation trap the in-row
-    * HOF formulation hits). Output: (id_a, id_b, sig_frac) where
-    * sig_frac = fraction of the k signature rows that agree.
-    */
-  /** Portable signatures: 60-bit md5 shingle hashes mod 2^31-1 folded
-    * through the imperative agg in portable mode → (doc_id, sig).
+  /** Portable signatures → (doc_id, sig), computed in-row by the fused
+    * `graft_minhash_md5` kernel: one scan-stage projection, no shingle
+    * explode and no per-doc aggregation. A doc with no shingles returns
+    * an empty array and is filtered out.
     */
   private[graft] def portableSignatures(docs: DataFrame, idCol: String, textCol: String,
-                                        n: Int, k: Int): DataFrame = {
-    // the WHOLE signature in-row ([[graft.plans.WordMinHashMd5]]):
-    // distinct shingles → md5-60 → mod 2^31-1 → k portable permutation
-    // minima, fused into one scan-stage kernel. Bit-identical to the
-    // previous explode(graft_shingle_md5_60) → pmod →
-    // MinHashSigAgg(portable) shape (DedupSpec pins it), but the
-    // explode (~#shingles UnsafeRows per doc), the per-doc aggregation
-    // buffer, and the groupBy exchange — whose groups were exactly the
-    // input rows — are gone (guide §1.2/§2.4). A doc with no shingles
-    // returns an empty array and is filtered, mirroring its absence
-    // from the old groupBy output.
+                                        n: Int, k: Int): DataFrame =
     graft.operators.Partitioning
       .ensureMinParallelism(docs.select(col(idCol).as("doc_id"), col(textCol).as("text")))
       .select(col("doc_id"),
         call_function("graft_minhash_md5", col("text"), lit(n), lit(k)).as("sig"))
       .filter(size(col("sig")) > 0)
-  }
 
   /** (doc_id, sig) → exploded (doc_id, band, bkey) band keys, the
     * ':'-joined text form every ANSI engine reproduces.
@@ -77,14 +45,23 @@ object MinHashDedup {
         .as(Seq("band", "bkey")))
   }
 
-  /** Lazy plan + its signature pin, for plan inspection (PlanQualitySpec
-    * asserts the ids-only buckets and shuffle_hash re-join on THIS
-    * plan; the public [[portablePairs]] eagerly materializes, which
-    * collapses the visible plan to a checkpoint scan).
+  /** Portable MinHash+LSH near-dup pairs — the only MinHash path:
+    * every hash is exact in plain 64-bit arithmetic (60-bit md5
+    * shingle hashes reduced mod 2^31-1, the squared-constant
+    * permutations of [[graft.plans.MinHashMd5Util]], products < 2^62,
+    * no wraparound), so an ANSI engine reproduces the ENTIRE pipeline
+    * bit-for-bit: the DuckDB oracles hash-match banding, buckets, and
+    * signature-agreement scores. It is the `dedup_minhash` declared query
+    * at the production parameters (k=64, 16 bands) and the smaller
+    * `dedup_minhash_md5` config (k=16, 4 bands); DedupSpec pins recall
+    * and estimate error against brute-force Jaccard at k=64.
+    *
+    * Output: (id_a, id_b, sig_frac) where sig_frac = fraction of the k
+    * signature rows that agree.
     */
-  private[graft] def portablePairsLazy(docs: DataFrame, idCol: String, textCol: String,
+  def portablePairs(docs: DataFrame, idCol: String, textCol: String,
                     n: Int = 3, k: Int = 16, numBands: Int = 4,
-                    threshold: Double = 0.5, maxBucket: Int = 500): (DataFrame, DataFrame) = {
+                    threshold: Double = 0.5, maxBucket: Int = 500): DataFrame = {
     // Signatures feed three consumers (banding, the id_a join, the id_b
     // join); materialized once or the text-scan+md5 pipeline runs 3×
     // (Partitioning.materializeOnce scaladoc has the measurements).
@@ -93,8 +70,9 @@ object MinHashDedup {
     // Buckets carry ONLY doc ids (8 bytes/member through the shuffle) —
     // at k=64 a (doc_id, sig) struct is 520B/member; signatures re-join
     // by id AFTER pair dedup, when the pair set is small, pinned
-    // shuffle_hash like candidatePairs (the planner broadcasting a
-    // corpus-sized side is the measured OOM ScaleProbe caught).
+    // shuffle_hash (the planner broadcasting a corpus-sized side is the
+    // measured OOM ScaleProbe caught). maxBucket caps bucket size, the
+    // stop-content skew guard.
     val banded = portableBands(sig, k, numBands)
     val buckets = banded.groupBy(col("band"), col("bkey"))
       .agg(graft.functions.BoundedCollectList.column(col("doc_id"), maxBucket).as("members"))
@@ -110,52 +88,9 @@ object MinHashDedup {
           .cast("double") / k)
       .filter(col("sig_frac") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("sig_frac"), 6).as("sig_frac"))
-    (out, sig)
-  }
-
-  def portablePairs(docs: DataFrame, idCol: String, textCol: String,
-                    n: Int = 3, k: Int = 16, numBands: Int = 4,
-                    threshold: Double = 0.5, maxBucket: Int = 500): DataFrame = {
-    val (out, sig) = portablePairsLazy(docs, idCol, textCol, n, k, numBands, threshold, maxBucket)
     // pair-sized output: eager checkpoint, then drop the signature pin
     // (Partitioning.releasePinsAfter scaladoc has the lifecycle contract)
     graft.operators.Partitioning.releasePinsAfter(out, sig)
-  }
-
-  /** Declarative permutation — retained as the independent reference
-    * formulation that DedupSpec checks [[graft.functions.MinHashSigAgg]]
-    * against bit-for-bit.
-    */
-  private[graft] def perm(i: Int, h: Column): Column = {
-    val a = 2L * (1103515245L * (i + 1) + 12345L) + 1L // fixed odd multiplier
-    val b = 1103515245L * (i + 7919) + 104729L
-    pmod(h * a + b, lit(P))
-  }
-
-  /** Docs → (doc_id, k-permutation signature, n_shingles).
-    *
-    * Shape: explode distinct shingles → hash each ONCE → fold through
-    * the single imperative [[graft.functions.MinHashSigAgg]] (map-side
-    * partial fold, one shuffle of k longs per doc). The earlier k
-    * separate `min(pmod(...))` aggregate columns produced the same
-    * values but cost k buffers and a multi-second Janino compile of
-    * the k-wide generated aggregate per cold query; the all-in-row
-    * alternative (k × `array_min(transform(...))`) is quadratic —
-    * projection collapse re-inlines shingling into every branch
-    * (measured 60× slower at sf0.01).
-    * Permutation i: h_i(x) = (a_i * x + b_i) mod p with fixed odd a_i.
-    */
-  def signatures(docs: DataFrame, idCol: String, textCol: String,
-                 shingleN: Int = 3, k: Int = 64): DataFrame = {
-    val hashed = graft.operators.Partitioning
-      .ensureMinParallelism(docs.select(col(idCol).as("doc_id"), col(textCol)))
-      .select(col("doc_id"), explode(Dedup.shingleHashes(col(textCol), shingleN)).as("h0"))
-      .select(col("doc_id"), abs(col("h0")).as("h"))
-    hashed
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_shingles"),
-        graft.functions.MinHashSigAgg.column(col("h"), k).as("sig"))
-      .select(col("doc_id"), col("sig"), col("n_shingles"))
   }
 
   /** Ordered intra-bucket pairs via two chained `explode`s (both fully
@@ -168,70 +103,6 @@ object MinHashDedup {
       .select(explode(col(memberCol)).as("a"), col(memberCol))
       .select(col("a"), explode(col(memberCol)).as("b"))
       .filter(col("a") < col("b"))
-
-  /** Candidate pairs via banding: split the k-sig into `numBands` bands
-    * of `k/numBands` rows; docs agreeing on any whole band meet in a
-    * bucket. Band hashes are variadic `xxhash64(band_idx, m_i..m_j)`
-    * straight off the signature values — no per-band string building.
-    *
-    * Buckets carry ONLY doc ids (8 bytes/member through the shuffle —
-    * signatures are joined back afterwards, when the pair list is
-    * already deduped and small). `maxBucket` caps bucket size, the
-    * stop-content skew guard. The earlier window + self-join shape cost
-    * two extra shuffles, a per-bucket sort, and shipped every signature
-    * through the banding exchange.
-    */
-  def candidatePairs(sigs: DataFrame, k: Int, numBands: Int, maxBucket: Int = 500): DataFrame = {
-    val rowsPerBand = k / numBands
-    require(rowsPerBand * numBands == k, s"numBands must divide k")
-    val banded = sigs.select(
-      col("doc_id"),
-      posexplode(
-        array((0 until numBands).map { b =>
-          xxhash64((lit(b) +: (0 until rowsPerBand).map(r =>
-            element_at(col("sig"), b * rowsPerBand + r + 1))): _*)
-        }: _*)
-      ).as(Seq("band_idx", "band_hash"))
-    )
-    // Capped collect (not collect_list-then-filter): a hot band shared by
-    // millions of docs would otherwise build one unbounded, unspillable
-    // aggregation buffer before the size filter could drop it.
-    val buckets = banded
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(graft.functions.BoundedCollectList.column(col("doc_id"), maxBucket).as("members"))
-      .filter(size(col("members")).between(2, maxBucket))
-    val pairs = explodePairs(buckets, "members")
-      .select(col("a").as("id_a"), col("b").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    // signatures re-join by id through a SHUFFLE, never a broadcast:
-    // sigs is corpus-sized (k×8B per doc) — the same planner broadcast
-    // attempt that OOMed lshPairs' vector re-join at probe scale applies
-    // here; shuffle_hash pins the id-keyed exchange with the small
-    // deduped pair set as the build side
-    val sa = sigs.select(col("doc_id").as("id_a"), col("sig").as("sig_a"))
-    val sb = sigs.select(col("doc_id").as("id_b"), col("sig").as("sig_b"))
-    pairs.join(sa.hint("shuffle_hash"), "id_a").join(sb.hint("shuffle_hash"), "id_b")
-      .select(col("id_a"), col("id_b"), col("sig_a"), col("sig_b"))
-  }
-
-  /** Estimated Jaccard = fraction of agreeing signature positions. */
-  def estJaccard(sigA: Column, sigB: Column): Column =
-    aggregate(zip_with(sigA, sigB, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, x) => acc + x).cast("double") / size(sigA).cast("double")
-
-  /** Full pipeline: near-dup pairs with estimated Jaccard ≥ threshold. */
-  def nearDupPairs(docs: DataFrame, idCol: String, textCol: String,
-                   shingleN: Int = 3, k: Int = 64, numBands: Int = 16,
-                   threshold: Double = 0.5): DataFrame = {
-    // three consumers inside candidatePairs — see portablePairsLazy
-    val sigs = graft.operators.Partitioning.materializeOnce(
-      signatures(docs, idCol, textCol, shingleN, k))
-    val out = candidatePairs(sigs, k, numBands)
-      .withColumn("est_jaccard", estJaccard(col("sig_a"), col("sig_b")))
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("est_jaccard"), 6).as("est_jaccard"))
-    graft.operators.Partitioning.releasePinsAfter(out, sigs)
-  }
 
   /** Persistable MinHash index over a corpus — the continual-ingest
     * scale path: signatures and band keys computed ONCE, written once

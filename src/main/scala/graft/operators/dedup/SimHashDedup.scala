@@ -8,12 +8,14 @@ import org.apache.spark.sql.functions._
   * over tokens of ±1 votes from bit b of each token's hash. Near-dup
   * pairs = fingerprints within small Hamming distance.
   *
-  * Scale design: the fingerprint is computed in-row (one `aggregate`
-  * over the token array maintaining a 64-wide vote vector — no shuffle).
-  * Candidate generation uses the standard block trick: split 64 bits
-  * into `blocks` chunks; pairs within Hamming distance d must agree on
-  * at least one chunk when blocks > d, so an equi-join per block replaces
-  * the O(n²) comparison. `bit_count(a XOR b)` verifies exactly.
+  * Two fingerprints live here: [[simhash]], the native 64-bit
+  * xxhash-vote expression that streaming equality dedup keys on
+  * (`StreamingDedup.nearFirstWins`), and the portable 60-bit md5-vote
+  * fingerprint behind [[portablePairs]] and the stored index.
+  * Candidate generation uses the standard block trick: split the bits
+  * into blocks; pairs within Hamming distance d must agree on at least
+  * one block when blocks > d, so an equi-join per block replaces the
+  * O(n²) comparison. `bit_count(a XOR b)` verifies exactly.
   */
 object SimHashDedup {
 
@@ -43,22 +45,12 @@ object SimHashDedup {
       lit(0L), (acc, x) => acc + x)
   }
 
-  /** Docs → (doc_id, fingerprint). */
-  def fingerprints(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    graft.operators.Partitioning
-      .ensureMinParallelism(docs.select(col(idCol).as("doc_id"), col(textCol)))
-      .select(
-        col("doc_id"),
-        simhash(split(Dedup.normText(col(textCol)), " ")).as("fingerprint")
-      )
-
   /** Portable-arithmetic SimHash pairs — the `dedup_simhash` driver
     * query (full DuckDB hash oracle): 60-bit fingerprints from
     * md5-derived token hashes (15 hex chars → exact in 64-bit
     * everywhere), 5 blocks of 12 bits, Hamming ≤ `maxDist` < blocks.
-    * The xxhash64 native-expression path ([[nearDupPairs]]) stays the
-    * fastest library form; this variant lets DuckDB rebuild every
-    * fingerprint, block key, and Hamming distance bit-for-bit.
+    * DuckDB rebuilds every fingerprint, block key, and Hamming distance
+    * bit-for-bit.
     *
     * The vote fold runs in-row as nested higher-order functions —
     * interpreted, but every non-trivial subtree (`hs`, `votes`) is
@@ -143,35 +135,5 @@ object SimHashDedup {
       .filter(col("hamming") <= maxDist)
       .select(col("bid").as("doc_id"), col("m.doc_id").as("dup_of"), col("hamming"))
       .dropDuplicates("doc_id", "dup_of")
-  }
-
-  /** Near-dup pairs with Hamming distance ≤ maxDist via the block join.
-    * With `blocks` 16-bit chunks (blocks=4), any pair with ≤3 differing
-    * bits shares a chunk — pigeonhole guarantees recall for
-    * maxDist < blocks.
-    */
-  def nearDupPairs(docs: DataFrame, idCol: String, textCol: String,
-                   maxDist: Int = 3, blocks: Int = 4, maxBucket: Int = 1000): DataFrame = {
-    val fps = fingerprints(docs, idCol, textCol)
-    val bits = 64 / blocks
-    val chunked = fps.select(
-      col("doc_id"), col("fingerprint"),
-      posexplode(
-        array((0 until blocks).map(b =>
-          shiftrightunsigned(col("fingerprint"), b * bits).bitwiseAND(lit((1L << bits) - 1))): _*)
-      ).as(Seq("block_idx", "block_val"))
-    )
-    // one groupBy shuffle (capped buckets — stop-content guard), pairs
-    // emitted via chained codegen'd explodes, like the other dedup ops
-    val buckets = chunked
-      .groupBy(col("block_idx"), col("block_val"))
-      .agg(graft.functions.BoundedCollectList.column(
-        struct(col("doc_id"), col("fingerprint")), maxBucket).as("members"))
-      .filter(size(col("members")).between(2, maxBucket))
-    MinHashDedup.explodePairs(buckets, "members")
-      .withColumn("hamming", bit_count(col("a.fingerprint").bitwiseXOR(col("b.fingerprint"))))
-      .filter(col("hamming") <= maxDist)
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"), col("hamming"))
-      .dropDuplicates("id_a", "id_b")
   }
 }

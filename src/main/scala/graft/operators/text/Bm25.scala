@@ -426,16 +426,6 @@ object Bm25 {
   def prfTopK(docs: DataFrame, queries: DataFrame, idCol: String, textCol: String,
               qidCol: String, qtextCol: String, k: Int = 10, fb: Int = 5,
               expand: Int = 3): DataFrame = {
-    val (out, pins) = prfTopKLazy(docs, queries, idCol, textCol, qidCol, qtextCol, k, fb, expand)
-    // top-k-sized output: eager checkpoint, then release the postings/
-    // stats pins (Partitioning.releasePinsAfter has the contract)
-    graft.operators.Partitioning.releasePinsAfter(out, pins: _*)
-  }
-
-  /** Lazy plan + pins — plan inspection only (see portablePairsLazy). */
-  private[graft] def prfTopKLazy(docs: DataFrame, queries: DataFrame, idCol: String, textCol: String,
-              qidCol: String, qtextCol: String, k: Int = 10, fb: Int = 5,
-              expand: Int = 3): (DataFrame, Seq[DataFrame]) = {
     // postings (corpus tokenize + df window) feed three consumers —
     // feedback scoring, expansion mining, final scoring — and stats
     // (a corpus scan) broadcast into each: materialized once, or both
@@ -459,6 +449,9 @@ object Bm25 {
         .orderBy(col("w").desc, col("term").asc)))
       .filter(col("rk") <= expand)
       .select(col("query_id"), col("term"))
-    (rankTopK(scores(post, stats, qt.union(expTerms)), k), Seq(post, stats))
+    // top-k-sized output: eager checkpoint, then release the postings/
+    // stats pins (Partitioning.releasePinsAfter has the contract)
+    graft.operators.Partitioning.releasePinsAfter(
+      rankTopK(scores(post, stats, qt.union(expTerms)), k), post, stats)
   }
 }

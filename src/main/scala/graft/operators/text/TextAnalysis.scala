@@ -72,14 +72,6 @@ object TextAnalysis {
       length(regexp_replace(c, "[^.,;:!?'\"()\\[\\]{}-]", "")).cast("double") /
         length(c).cast("double"))
 
-  def stopwordRatio(c: Column): Column = {
-    val toks = tokens(c)
-    val en = profiles.head._2
-    when(size(toks) === 0, lit(0.0)).otherwise(
-      size(filter(toks, t => en.map(w => t === lit(w)).reduce(_ || _))).cast("double") /
-        size(toks).cast("double"))
-  }
-
   def meanWordLen(c: Column): Column = {
     val toks = tokens(c)
     when(size(toks) === 0, lit(0.0)).otherwise(
@@ -247,17 +239,6 @@ object TextAnalysis {
     */
   def lmCrossEntropy(docs: DataFrame, ref: DataFrame,
                      idCol: String, textCol: String): DataFrame = {
-    val (out, refToks) = lmCrossEntropyLazy(docs, ref, idCol, textCol)
-    // per-doc-sized output: eager checkpoint, then drop the ref pin
-    graft.operators.Partitioning.releasePinsAfter(out, refToks)
-  }
-
-  /** Lazy plan + its ref pin — plan inspection only (the
-    * portablePairsLazy pattern: the public form eagerly materializes,
-    * collapsing the visible plan to a checkpoint scan).
-    */
-  private[graft] def lmCrossEntropyLazy(docs: DataFrame, ref: DataFrame,
-                     idCol: String, textCol: String): (DataFrame, DataFrame) = {
     // materialized once: the vocab, bigram, and history aggregates all
     // consume the reference tokenization, and Catalyst shares no
     // subtrees — the ref slice tokenized three times per call (§5);
@@ -287,7 +268,8 @@ object TextAnalysis {
       .agg(sum(col("cnt")).as("n_bigrams"),
            sum(col("cnt") * col("nll_micros")).as("nll_sum_micros"))
       .withColumn("avg_nll_micros", expr("nll_sum_micros div n_bigrams"))
-    (out, refToks)
+    // per-doc-sized output: eager checkpoint, then drop the ref pin
+    graft.operators.Partitioning.releasePinsAfter(out, refToks)
   }
 
   /** The remaining Gopher repetition signals (Rae et al. 2021 A1.1,

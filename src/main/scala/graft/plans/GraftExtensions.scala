@@ -89,23 +89,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         graft.functions.GtidSetImpAgg(children.head)
       }
     ))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[graft.functions.MinHashSigAgg].getName, "graft_minhash_sig"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2 || children.length == 3,
-          "graft_minhash_sig(h, k[, portable]) takes a long column, an int literal, and an optional boolean literal")
-        val k = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => sys.error(s"graft_minhash_sig: k must be an int literal, got $other")
-        }
-        val portable = children.lift(2).map {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Boolean, _) => v
-          case other => sys.error(s"graft_minhash_sig: portable must be a boolean literal, got $other")
-        }.getOrElse(false)
-        graft.functions.MinHashSigAgg(children.head, k, portable)
-      }
-    ))
     // Spark's runtime-filter Bloom machinery, exposed as functions: the
     // classes are public but only the optimizer's InjectRuntimeFilter
     // instantiates them — registering them gives the dedup family an

@@ -9,26 +9,23 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared eval/codegen helper (static-callable from Janino). */
 object ParagraphUtil {
-  /** Fixed `n`-word blocks of the lowercased, whitespace-normalized
-    * words of `text` — the semantics of `transform(sequence(0,
-    * ceil(size(words)/n)-1), i => concat_ws(" ", slice(words, i*n+1,
-    * n)))` over `split(normText, " ")`, in one linear pass. The HOF
-    * form re-evaluates the split subtree per paragraph (interpreted
-    * lambdas), making long documents quadratic; measured 33 s → 5 s at
-    * the 50× ScaleProbe corpus when this expression replaced it.
+  /** Word windows of the lowercased, whitespace-normalized words of
+    * `text`: width `n`, step `stride`, in one linear pass. `stride == n`
+    * is disjoint paragraph blocking — the semantics of
+    * `transform(sequence(0, ceil(size(words)/n)-1), i => concat_ws(" ",
+    * slice(words, i*n+1, n)))` over `split(normText, " ")`. The HOF form
+    * re-evaluates the split subtree per paragraph (interpreted lambdas),
+    * making long documents quadratic; measured 33 s → 5 s at the 50×
+    * ScaleProbe corpus when this expression replaced it. `stride < n`
+    * yields overlapping context windows (the train-prep chunking that
+    * keeps `n - stride` words of context across window boundaries).
+    * Window count for `m > 0` words is `1 + ceil(max(0, m - n) /
+    * stride)` — the last window may be short, and no window starts at
+    * or past `m`.
     *
-    * Whitespace-only/empty text yields one empty paragraph — exactly
-    * what `split('', ' ') = ['']` produces in the SQL formulation both
+    * Whitespace-only/empty text yields one empty window — exactly what
+    * `split('', ' ') = ['']` produces in the SQL formulation both
     * engines share.
-    */
-  def paragraphs(text: UTF8String, n: Int): ArrayData = windows(text, n, n)
-
-  /** Generalized word windows: width `n`, step `stride`. `stride == n`
-    * is disjoint paragraph blocking; `stride < n` yields overlapping
-    * context windows (the train-prep chunking that keeps `n - stride`
-    * words of context across window boundaries). Window count for
-    * `m > 0` words is `1 + ceil(max(0, m - n) / stride)` — the last
-    * window may be short, and no window starts at or past `m`.
     */
   def windows(text: UTF8String, n: Int, stride: Int): ArrayData = {
     val words = ShingleUtil.normWords(text) // shared parity contract

@@ -71,22 +71,35 @@ object ShingleMd5Util {
 }
 
 /** Fused text→portable-MinHash-signature: the ENTIRE signature of the
-  * minhash pipeline — distinct shingles → md5 top-60 → mod 2^31-1 →
-  * k portable permutation minima — computed inside the row, so the
+  * minhash pipeline — distinct shingles → md5 top-60 → mod p → k
+  * portable permutation minima — computed inside the row, so the
   * signature stage is a pure scan projection: no shingle explode
   * through the UnsafeRow writer, no per-doc aggregation buffer, no
   * exchange (guide §1.2: the distributed algorithm had a groupBy whose
-  * groups were exactly the input rows). Bit-identical to folding
-  * `pmod(graft_shingle_md5_60(text, n), 2^31-1)` through
-  * [[graft.functions.MinHashSigAgg]] in portable mode — the permutation
-  * constants `h_j(x) = ((2j+1)·x + j·12345 + 7) mod (2^31-1)` are that
-  * aggregate's, and DedupSpec pins the equivalence. A doc with no
-  * shingles (fewer than n words) returns an EMPTY array — the caller
-  * filters it out, mirroring the doc's absence from the old groupBy
-  * output.
+  * groups were exactly the input rows).
+  *
+  * Permutation j is `h_j(x) = (a_j·x + b_j) mod p`, p = 2^31-1, with
+  * `a_j = c_j² mod p`, `b_j = d_j² mod p`,
+  * `c_j = ((j+1)·1103515245 + 12345) mod p` and
+  * `d_j = ((j+7919)·1103515245 + 104729) mod p`. Every product stays
+  * below 2^62, so an ANSI engine (the DuckDB oracles) reproduces each
+  * value in plain 64-bit arithmetic. The squaring matters: small or
+  * evenly spaced multipliers make the k permutations order the shingle
+  * hashes almost alike, so two docs sharing one low-hash shingle agree
+  * on most rows (measured at sf0.1: |sig_frac − J| up to 0.91 with
+  * `a_j = 2j+1`, 0.48 with `a_j = c_j`, 0.09 with `c_j²`). DedupSpec
+  * pins the kernel against the declarative k-min formulation and its
+  * estimates against brute-force Jaccard. A doc with no shingles (fewer
+  * than n words) returns an EMPTY array — the caller filters it out.
   */
 object MinHashMd5Util {
   private val P31 = 2147483647L // 2^31 - 1
+
+  private def square(v: Long): Long = v * v % P31
+
+  /** Multiplier a_j and offset b_j of permutation j (see the scaladoc). */
+  private def permA(j: Int): Long = square(((j + 1) * 1103515245L + 12345L) % P31)
+  private def permB(j: Int): Long = square(((j + 7919) * 1103515245L + 104729L) % P31)
 
   // (text, n, k) → result memo, one slot per thread: the caller filters
   // on size(sig) > 0, and predicate pushdown re-inlines the projection
@@ -107,6 +120,8 @@ object MinHashMd5Util {
   private def compute(text: UTF8String, n: Int, k: Int): ArrayData = {
     val shingles = ShingleUtil.distinctShingles(text, n)
     if (shingles.isEmpty) return new GenericArrayData(Array.empty[Any])
+    val as = Array.tabulate(k)(permA)
+    val bs = Array.tabulate(k)(permB)
     val buf = Array.fill(k)(Long.MaxValue)
     val it = shingles.iterator()
     while (it.hasNext) {
@@ -114,9 +129,8 @@ object MinHashMd5Util {
       val h = Md5Util.top60(UTF8String.fromString(it.next())) % P31
       var i = 0
       while (i < k) {
-        // products < 2^62 — no wraparound, m never negative (the agg's
-        // sign-correction branch is provably dead in portable mode)
-        val m = (h * (2L * i + 1L) + (i * 12345L + 7L)) % P31
+        // a_i·h + b_i < 2^62 + 2^31 — no wraparound, m never negative
+        val m = (as(i) * h + bs(i)) % P31
         if (m < buf(i)) buf(i) = m
         i += 1
       }

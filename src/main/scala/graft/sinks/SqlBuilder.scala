@@ -127,12 +127,4 @@ object SqlBuilder {
 
   def ledgerInsert(schema: String): String =
     s"INSERT INTO `$schema`.`gtid_executed` (job_id, source_uuid, gtid, gtid_set) VALUES (?, ?, ?, ?)"
-
-  /** Ledger compaction (reference `applier_gtid_executed.go:248-291`):
-    * collapse per-tx rows into one interval-set row per source UUID once
-    * more than `threshold` rows accumulate. The interval-set string is
-    * computed by [[graft.functions.IntervalSet]].
-    */
-  def ledgerCompactDelete(schema: String): String =
-    s"DELETE FROM `$schema`.`gtid_executed` WHERE job_id = ? AND source_uuid = ? AND gtid != 0"
 }

@@ -234,24 +234,6 @@ object ZOrderLayout {
         min(col(yCol).cast("long")).as("min_y"), max(col(yCol).cast("long")).as("max_y"),
         min(col(zCol).cast("long")).as("min_z"), max(col(zCol).cast("long")).as("max_z"))
 
-  /** [[writeZOrdered]] for the three-column curve. */
-  def writeZOrdered3(df: DataFrame, xCol: String, yCol: String, zCol: String,
-                     path: String, numFiles: Int, bits: Int = 10): Unit =
-    withZValue3(df, xCol, yCol, zCol, bits)
-      .repartitionByRange(numFiles, col("zv"))
-      .sortWithinPartitions(col("zv"))
-      .drop("zv")
-      .write.mode("overwrite").parquet(path)
-
-  /** [[writeZOrdered]] with rank codes — the skew-proof write path. */
-  def writeZOrderedRank(df: DataFrame, xCol: String, yCol: String, path: String,
-                        numFiles: Int, bits: Int = 10): Unit =
-    withZValueRank(df, xCol, yCol, bits)
-      .repartitionByRange(numFiles, col("zv"))
-      .sortWithinPartitions(col("zv"))
-      .drop("zv")
-      .write.mode("overwrite").parquet(path)
-
   /** The pruning evidence as a queryable result: rows bucketed by the
     * TOP `log2(buckets)` z-value bits (= the files a range writer
     * would cut), with per-bucket count and min/max spans of both

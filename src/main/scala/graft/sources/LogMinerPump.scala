@@ -37,7 +37,6 @@ object LogMinerPump {
       case None =>
         if (r.csf == 1) { pending(r.xid) = r; None } else Some(r)
     }
-    def pendingCount: Int = pending.size
   }
 
   /** Op-code mapping; START and MISSING_SCN markers drop (the tx cache

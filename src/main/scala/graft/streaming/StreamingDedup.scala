@@ -39,7 +39,7 @@ object StreamingDedup {
     * streaming state: fingerprint EQUALITY is the radius-0 block of the
     * batch pigeonhole join, which catches same-length light edits;
     * cross-horizon and radius>0 near-dups remain the periodic batch
-    * pass's job ([[graft.operators.dedup.SimHashDedup.nearDupPairs]]).
+    * pass's job ([[graft.operators.dedup.SimHashDedup.portablePairs]]).
     */
   def nearFirstWins(docs: DataFrame, textCol: String, tsCol: String, delay: String): DataFrame =
     docs

@@ -364,4 +364,34 @@ class CrawlFrontierSpec extends SparkSpec {
     assert(seen.length == 40)
     assert(!new java.io.File(s"$dir/staging/epoch-0").exists())
   }
+
+  test("a meta dir with no parquet part or only empty parts is an IllegalStateException") {
+    import spark.implicits._
+    val dir = TempDirs.scratch("frontier_badmeta")
+    CrawlFrontier.buildIndex(
+      (0 until 10).map(i => (s"http://bm.com/$i", 1L)).toDF("url", "day"),
+      "url", col("day"), dir, nShards = 4, expectedItems = 1000L)
+    val batch = Seq("http://bm.com/new").toDF("url")
+    val meta = new java.io.File(s"$dir/meta")
+    def resetMeta(): Unit = {
+      meta.listFiles().foreach(_.delete())
+      assert(meta.listFiles().isEmpty)
+    }
+    // no parquet part at all
+    resetMeta()
+    java.nio.file.Files.write(new java.io.File(meta, "_SUCCESS").toPath, Array.emptyByteArray)
+    val noPart = intercept[IllegalStateException] {
+      CrawlFrontier.probeNew(spark, dir, batch, "url")
+    }
+    assert(noPart.getMessage.contains("no parquet part"), noPart.getMessage)
+    // parquet parts present, every one empty
+    resetMeta()
+    spark.createDataFrame(Seq((4, 1000L))).toDF("n_shards", "expected_items")
+      .limit(0).write.mode("overwrite").parquet(meta.getPath)
+    assert(meta.listFiles().exists(_.getName.endsWith(".parquet")), "empty write left no part")
+    val allEmpty = intercept[IllegalStateException] {
+      CrawlFrontier.probeNew(spark, dir, batch, "url")
+    }
+    assert(allEmpty.getMessage.contains("is empty"), allEmpty.getMessage)
+  }
 }

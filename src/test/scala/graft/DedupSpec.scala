@@ -66,12 +66,16 @@ class DedupSpec extends SparkSpec {
     assert(all.forall(_ >= 0.5))
   }
 
+  /** The production MinHash configuration (`dedup_minhash`): k=64, 16 bands. */
+  private def minhash64(): Array[(Long, Long, Double)] =
+    MinHashDedup.portablePairs(docs, "doc_id", "text",
+        n = 3, k = 64, numBands = 16, threshold = 0.5)
+      .select("id_a", "id_b", "sig_frac").as[(Long, Long, Double)].collect()
+
   test("minhash est_jaccard tracks true jaccard on planted dups") {
     val truth = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3, threshold = 0.8)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val mh = MinHashDedup.nearDupPairs(docs, "doc_id", "text",
-        shingleN = 3, k = 64, numBands = 16, threshold = 0.5)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    val mh = minhash64().map(p => (p._1, p._2)).toSet
     // recall: all high-jaccard pairs found by the sketch
     val recall = if (truth.isEmpty) 1.0 else truth.intersect(mh).size.toDouble / truth.size
     assert(recall >= 0.9, s"minhash recall $recall over ${truth.size} true pairs")
@@ -114,32 +118,63 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("in-row graft_minhash_md5 == MinHashSigAgg(portable) fold, both k configs") {
-    // the r18 fused signature kernel must be indistinguishable from the
-    // explode(graft_shingle_md5_60) → pmod → imperative-agg shape it
-    // replaced — including WHICH docs appear (no-shingle docs absent)
+  // The textbook MinHash over shingle hashes `h` already reduced mod p:
+  // k separate min((a_j·h + b_j) mod p) aggregates, a_j and b_j written
+  // out here from the closed form, independently of the kernel's
+  // constants. The in-row kernel graft_minhash_md5 must match it.
+  private val p31 = 2147483647L
+  private def kMinSigs(hashed: org.apache.spark.sql.DataFrame, k: Int): Map[Long, Seq[Long]] = {
+    def sq(v: BigInt): Long = (v * v).mod(p31).toLong
+    def a(j: Int): Long = sq((BigInt(j + 1) * 1103515245L + 12345L).mod(p31))
+    def b(j: Int): Long = sq((BigInt(j + 7919) * 1103515245L + 104729L).mod(p31))
+    val minCols = (0 until k).map(j =>
+      min((col("h") * lit(a(j)) + lit(b(j))) % lit(p31)).as(s"m$j"))
+    hashed.groupBy("doc_id").agg(minCols.head, minCols.tail: _*)
+      .collect().map(r => r.getLong(0) -> (1 to k).map(r.getLong(_))).toMap
+  }
+  private def inRowSigs(corpus: org.apache.spark.sql.DataFrame, k: Int): Map[Long, Seq[Long]] =
+    corpus
+      .select(col("doc_id"),
+        call_function("graft_minhash_md5", col("text"), lit(3), lit(k)).as("sig"))
+      .filter(size(col("sig")) > 0)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+
+  test("graft_minhash_md5 == declarative k-min over the conv(md5) shingle chain, k=16") {
+    // reference hashes built from the string shingles through the SQL
+    // md5 chain every oracle replays, not through graft_shingle_md5_60
+    val k = 16
+    val corpus = docs.select(col("doc_id"), col("text")).limit(100)
+    val hashed = corpus
+      .select(col("doc_id"), explode(Dedup.shingles(col("text"), 3)).as("s"))
+      .select(col("doc_id"),
+        pmod(conv(substring(md5(col("s")), 1, 15), 16, 10).cast("long"), lit(p31)).as("h"))
+    val viaMins = kMinSigs(hashed, k)
+    val inRow = inRowSigs(corpus, k)
+    assert(viaMins.nonEmpty)
+    assert(inRow == viaMins, "in-row signature diverged from the md5-chain k-min formulation")
+  }
+
+  test("graft_minhash_md5 == declarative k-min over graft_shingle_md5_60, k=16 and 64") {
+    // the whole corpus plus edge docs; covers WHICH docs appear too
+    // (no-shingle docs absent)
     val edges = Seq((100001L, ""), (100002L, "a b"), (100003L, "  \t "),
       (100004L, "x y z x y z x y z"), (100005L, "😀 中文 mixed CASE test"),
-      (100006L, "vertical\ttab separated words here"))
+      (100006L, "vertical\u000btab separated words here"))
       .toDF("doc_id", "text")
     val corpus = docs.select(col("doc_id"), col("text")).unionByName(edges)
+    val hashed = corpus
+      .select(col("doc_id"),
+        explode(call_function("graft_shingle_md5_60", col("text"), lit(3))).as("h60"))
+      .select(col("doc_id"), pmod(col("h60"), lit(p31)).as("h"))
     for (k <- Seq(16, 64)) {
-      val agg = corpus
-        .select(col("doc_id"),
-          explode(call_function("graft_shingle_md5_60", col("text"), lit(3))).as("h60"))
-        .select(col("doc_id"), pmod(col("h60"), lit(2147483647L)).as("hs"))
-        .groupBy(col("doc_id"))
-        .agg(graft.functions.MinHashSigAgg.column(col("hs"), k, portable = true).as("sig"))
-      val inRow = corpus
-        .select(col("doc_id"),
-          call_function("graft_minhash_md5", col("text"), lit(3), lit(k)).as("sig"))
-        .filter(size(col("sig")) > 0)
-      val aggMap = agg.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      val inRowMap = inRow.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      assert(inRowMap.keySet == aggMap.keySet,
-        s"k=$k: doc sets diverged (no-shingle filtering must mirror groupBy absence)")
-      aggMap.foreach { case (id, sig) =>
-        assert(inRowMap(id) == sig, s"k=$k doc $id: in-row signature diverged from the agg fold")
+      val viaMins = kMinSigs(hashed, k)
+      val inRow = inRowSigs(corpus, k)
+      assert(inRow.keySet == viaMins.keySet,
+        s"k=$k: doc sets diverged (no-shingle docs must be absent)")
+      assert(inRow.keySet.contains(100004L) && !inRow.keySet.contains(100002L),
+        s"k=$k: edge docs misclassified")
+      viaMins.foreach { case (id, sig) =>
+        assert(inRow(id) == sig, s"k=$k doc $id: in-row signature diverged from the k-min formulation")
       }
     }
   }
@@ -178,28 +213,22 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.incrementalAgainst(empty, batch, "doc_id", "text").count() == 3)
   }
 
-  test("portable simhash finds the exact dups the fast path finds") {
-    val fast = SimHashDedup.nearDupPairs(docs, "doc_id", "text", maxDist = 3)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val portable = SimHashDedup.portablePairs(docs, "doc_id", "text", maxDist = 3)
-      .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect()
-    assert(portable.forall(_._3 <= 3))
-    // identical docs have identical fingerprints in BOTH hash families
-    val exactDups = fast.intersect(portable.map(p => (p._1, p._2)).toSet)
-    val zeroHam = portable.filter(_._3 == 0).map(p => (p._1, p._2)).toSet
-    assert(zeroHam.subsetOf(fast),
-      s"hamming-0 portable pairs missing from fast path: ${zeroHam.diff(fast)}")
-    assert(exactDups.nonEmpty, "hash families should agree on planted near-dups")
-  }
-
   test("minhash estimate is close to true jaccard") {
-    val est = MinHashDedup.nearDupPairs(docs, "doc_id", "text",
-        shingleN = 3, k = 64, numBands = 16, threshold = 0.5)
-      .withColumnRenamed("est_jaccard", "est")
-    val truth = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3, threshold = 0.0)
-    val joined = est.join(truth, Seq("id_a", "id_b"))
-      .select(abs(col("est") - col("jaccard")).as("err")).as[Double].collect()
-    assert(joined.nonEmpty && joined.forall(_ < 0.25), "64-perm estimate within 0.25 of truth")
+    // brute-force Jaccard over the same shingle sets for EVERY reported
+    // pair — a pair whose true overlap is near zero must not slip past
+    // a join against a thresholded ground-truth table
+    val est = minhash64()
+    val shingles = docs.select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
+      .as[(Long, Seq[String])].collect().map { case (id, sh) => id -> sh.toSet }.toMap
+    def jaccard(a: Long, b: Long): Double = {
+      val (x, y) = (shingles(a), shingles(b))
+      x.intersect(y).size.toDouble / x.union(y).size
+    }
+    val errs = est.map { case (a, b, f) => ((a, b), math.abs(f - jaccard(a, b))) }
+    assert(errs.nonEmpty, "the fixture corpus has planted near-dups")
+    val worst = errs.maxBy(_._2)
+    assert(worst._2 < 0.25,
+      s"64-perm estimate must be within 0.25 of true Jaccard; worst pair ${worst._1} off by ${worst._2}")
   }
 
   test("simhash: identical docs get identical fingerprints, near-dups small hamming") {
@@ -208,14 +237,15 @@ class DedupSpec extends SparkSpec {
       (2L, "the quick brown fox jumps over the lazy dog again and again"),
       (3L, "completely unrelated words about spark catalyst execution engines")
     ).toDF("doc_id", "text")
-    val fps = SimHashDedup.fingerprints(d, "doc_id", "text")
+    val fps = d.select(col("doc_id"),
+        SimHashDedup.simhash(split(Dedup.normText(col("text")), " ")))
       .as[(Long, Long)].collect().toMap
     assert(fps(1L) == fps(2L))
     assert(java.lang.Long.bitCount(fps(1L) ^ fps(3L)) > 10)
   }
 
   test("simhash pair search returns only verified-hamming pairs") {
-    val pairs = SimHashDedup.nearDupPairs(docs, "doc_id", "text", maxDist = 3, blocks = 4)
+    val pairs = SimHashDedup.portablePairs(docs, "doc_id", "text", maxDist = 3)
       .select("hamming").as[Int].collect()
     assert(pairs.forall(_ <= 3))
     assert(pairs.nonEmpty) // planted near-dups exist in the corpus
@@ -253,45 +283,6 @@ class DedupSpec extends SparkSpec {
     assert(!plan.contains("might_contain"), "driver-merged sketch literal crept back")
     assert(plan.contains("ShuffledHashJoin [__shard"), s"sketch join must be shuffle-hash:\n$plan")
     assert(!plan.contains("BroadcastExchange"), "nothing corpus-sized may broadcast")
-  }
-
-  test("MinHashSigAgg matches the declarative k-min formulation bit-for-bit") {
-    import org.apache.spark.sql.functions._
-    val k = 16
-    val docs = Tables.load(spark, sf, "documents").limit(100)
-    val hashed = docs
-      .select(col("doc_id"), explode(Dedup.shingles(col("text"), 3)).as("s"))
-      .select(col("doc_id"), abs(xxhash64(col("s"))).as("h"))
-      .cache()
-    val viaAgg = hashed.groupBy("doc_id")
-      .agg(graft.functions.MinHashSigAgg.column(col("h"), k).as("sig"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toList).toMap
-    val minCols = (0 until k).map(i => min(MinHashDedup.perm(i, col("h"))).as(s"m$i"))
-    val viaMins = hashed.groupBy("doc_id").agg(minCols.head, minCols.tail: _*)
-      .collect().map(r => r.getLong(0) -> (1 to k).map(r.getLong(_)).toList).toMap
-    hashed.unpersist()
-    assert(viaAgg == viaMins)
-  }
-
-  test("MinHashSigAgg portable mode matches the declarative portable formulation") {
-    import org.apache.spark.sql.functions._
-    val k = 16
-    val p31 = 2147483647L
-    val docs = Tables.load(spark, sf, "documents").limit(100)
-    val hashed = docs
-      .select(col("doc_id"), explode(Dedup.shingles(col("text"), 3)).as("s"))
-      .select(col("doc_id"),
-        pmod(conv(substring(md5(col("s")), 1, 15), 16, 10).cast("long"), lit(p31)).as("h"))
-      .cache()
-    val viaAgg = hashed.groupBy("doc_id")
-      .agg(graft.functions.MinHashSigAgg.column(col("h"), k, portable = true).as("sig"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toList).toMap
-    val minCols = (0 until k).map(j =>
-      min((col("h") * lit(2L * j + 1) + lit(j * 12345L + 7L)) % lit(p31)).as(s"m$j"))
-    val viaMins = hashed.groupBy("doc_id").agg(minCols.head, minCols.tail: _*)
-      .collect().map(r => r.getLong(0) -> (1 to k).map(r.getLong(_)).toList).toMap
-    hashed.unpersist()
-    assert(viaAgg == viaMins)
   }
 
   test("stored MinHash index: parquet round-trip probe == cross slice of in-corpus pairs") {

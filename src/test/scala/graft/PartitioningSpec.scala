@@ -53,4 +53,16 @@ class PartitioningSpec extends SparkSpec {
       Partitioning.saltedJoin(fact.withColumn("__salt", lit(1)), dim, "k", 8)
     }
   }
+
+  test("releasePinsAfter releases its pins when the output checkpoint throws") {
+    val cm = spark.sharedState.cacheManager
+    cm.clearCache()
+    val pin = Partitioning.materializeOnce(spark.range(100).toDF("id"))
+    assert(!cm.isEmpty, "materializeOnce must register its pin")
+    val failing = pin.select(
+      when(col("id") === 7L, raise_error(lit("checkpoint failure"))).otherwise(col("id")).as("id"))
+    val e = intercept[Exception] { Partitioning.releasePinsAfter(failing, pin) }
+    assert(String.valueOf(e.getMessage).contains("checkpoint failure"), e.getMessage)
+    assert(cm.isEmpty, "a failed checkpoint must not leave its pins cached")
+  }
 }

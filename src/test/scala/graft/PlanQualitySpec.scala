@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Guards the physical-plan properties the 100 TB design depends on —
   * a regression here is a scale bug even when results stay correct.
@@ -9,6 +11,36 @@ class PlanQualitySpec extends SparkSpec {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+
+  /** The plan that actually ran inside an eager operator. Operators that
+    * end in `Partitioning.releasePinsAfter` return a checkpoint scan, so
+    * the returned frame hides the join/aggregate shape; a registered
+    * listener sees the `localCheckpoint` execution itself. Listener
+    * callbacks arrive in order, so a marker query run afterwards bounds
+    * the wait, and the LAST checkpoint before it belongs to `run`.
+    * Fails when no such callback arrives.
+    */
+  private def checkpointedPlan(run: => Unit): QueryExecution = {
+    val seen = new java.util.concurrent.LinkedBlockingQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.put(funcName -> qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      run
+      spark.range(1).toDF("graft_plan_marker").collect()
+      val events = Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(_ != null)
+        .span(e => e._1 != "collect" || e._2.analyzed.output.map(_.name) != Seq("graft_plan_marker"))
+      val (before, marker) = (events._1.toList, events._2)
+      assert(marker.hasNext, "marker query callback never arrived")
+      val cps = before.collect { case ("localCheckpoint", qe) => qe }
+      assert(cps.nonEmpty, s"no localCheckpoint callback arrived; saw ${before.map(_._1)}")
+      cps.last
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   test("q2_join_enrich broadcasts the dimension sides") {
     val p = plan("q2_join_enrich")
@@ -153,14 +185,11 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("lm scoring joins the model tables shuffle-hash; only V broadcasts") {
-    // the public lmCrossEntropy eagerly materializes (releasing its ref
-    // pin), collapsing the visible plan — inspect the lazy inner plan,
-    // which is what actually runs (the portablePairsLazy pattern)
     val docs = Tables.load(spark, sf, "documents")
-    val (df, refPin) = graft.operators.text.TextAnalysis.lmCrossEntropyLazy(
-      docs, docs.filter(col("doc_id") % 7 === 0), "doc_id", "text")
-    refPin.unpersist()
-    val p = df.queryExecution.executedPlan.toString
+    val p = checkpointedPlan {
+      graft.operators.text.TextAnalysis.lmCrossEntropy(
+        docs, docs.filter(col("doc_id") % 7 === 0), "doc_id", "text")
+    }.executedPlan.toString
     assert(p.contains("ShuffledHashJoin"), s"model joins must shuffle, not broadcast:\n$p")
     assert(!p.contains("CartesianProduct"), s"unexpected cartesian:\n$p")
     assert(!p.contains("SortMergeJoin"), s"pinned shuffle_hash, got a sort-merge:\n$p")
@@ -443,14 +472,12 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("portable minhash buckets are ids-only; sig re-join is ShuffledHashJoin") {
-    // the public portablePairs eagerly materializes (releasing its
-    // signature pin), which collapses the visible plan to a checkpoint
-    // scan — inspect the lazy inner plan, which is what actually runs
-    val (df, sigPin) = graft.operators.dedup.MinHashDedup.portablePairsLazy(
-      Tables.load(spark, sf, "documents"), "doc_id", "text",
-      n = 3, k = 64, numBands = 16, threshold = 0.5, maxBucket = 500)
-    sigPin.unpersist()
-    val opt = df.queryExecution.optimizedPlan.toString
+    val qe = checkpointedPlan {
+      graft.operators.dedup.MinHashDedup.portablePairs(
+        Tables.load(spark, sf, "documents"), "doc_id", "text",
+        n = 3, k = 64, numBands = 16, threshold = 0.5, maxBucket = 500)
+    }
+    val opt = qe.optimizedPlan.toString
     assert(opt.contains("graft_collect_capped"),
       "portable minhash must bound hot bands with the capped collect")
     // the 64-long signature must NOT ride the band shuffle (520B/member
@@ -458,7 +485,7 @@ class PlanQualitySpec extends SparkSpec {
     val aggLines = opt.linesIterator.filter(_.contains("graft_collect_capped")).toSeq
     assert(aggLines.forall(l => !l.contains("sig")),
       s"signatures must not cross the bucket shuffle:\n$aggLines")
-    val p = df.queryExecution.executedPlan.toString
+    val p = qe.executedPlan.toString
     assert(p.contains("ShuffledHashJoin"),
       s"sig re-join must be shuffle_hash-pinned (planner broadcast of a corpus side OOMs at probe scale):\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
@@ -590,17 +617,15 @@ class PlanQualitySpec extends SparkSpec {
       val p = plan(q)
       assert(!p.contains("CartesianProduct"), s"$q has a cartesian product:\n$p")
     }
-    // prf eagerly materializes (pin release) — inspect the lazy inner
-    // plan, which is what actually runs
     locally {
       import spark.implicits._
       val qs = Seq((1L, "spark join table"), (2L, "window agg stream"))
         .toDF("query_id", "qtext")
-      val (prf, pins) = graft.operators.text.Bm25.prfTopKLazy(
-        Tables.load(spark, sf, "documents"), qs, "doc_id", "text", "query_id", "qtext",
-        k = 10, fb = 5, expand = 3)
-      val p = prf.queryExecution.executedPlan.toString
-      pins.foreach(_.unpersist())
+      val p = checkpointedPlan {
+        graft.operators.text.Bm25.prfTopK(
+          Tables.load(spark, sf, "documents"), qs, "doc_id", "text", "query_id", "qtext",
+          k = 10, fb = 5, expand = 3)
+      }.executedPlan.toString
       assert(!p.contains("CartesianProduct"), s"text_bm25_prf has a cartesian product:\n$p")
     }
     // percolate: every corpus-sized side is absent — batch tf joins the

@@ -84,11 +84,13 @@ class TextEdgeCasesSpec extends SparkSpec {
   }
 
   test("simhash fingerprints null/empty docs without failing; dedup pipelines run") {
-    val fps = SimHashDedup.fingerprints(edgeDocs, "doc_id", "text").collect()
+    val fps = edgeDocs.select(col("doc_id"),
+      SimHashDedup.simhash(split(Dedup.normText(col("text")), " "))).collect()
     assert(fps.length == 5)
     // full pipelines must not throw on edge rows
     assert(Dedup.exact(edgeDocs, "doc_id", "text").count() >= 3)
     Dedup.ngramJaccardPairs(edgeDocs, "doc_id", "text", 3, 0.5).count()
-    graft.operators.dedup.MinHashDedup.nearDupPairs(edgeDocs, "doc_id", "text").count()
+    SimHashDedup.portablePairs(edgeDocs, "doc_id", "text").count()
+    graft.operators.dedup.MinHashDedup.portablePairs(edgeDocs, "doc_id", "text").count()
   }
 }
