@@ -25,11 +25,12 @@ import graft.streaming.{CdcPipeline, DdlBarrierEvent, UpsertSink}
 object JobRunner {
   /** Build a runner straight from a reference-shaped job JSON
     * ([[graft.model.JobConfig]]) — a dtle user's existing job spec is
-    * the only input needed.
+    * the only input needed. Its streaming queries run the job's
+    * trigger ([[RuntimePlan.triggerMs]]).
     */
   def fromJson(spark: SparkSession, json: String): (JobRunner, JobConfig) = {
     val cfg = JobConfig.fromJson(json)
-    (new JobRunner(spark, cfg.repl), cfg)
+    (new JobRunner(spark, cfg.repl, runtimePlan(cfg, tableRows = 0L).triggerMs), cfg)
   }
 
   /** The reference's tuning knobs mapped onto this engine's runtime
@@ -40,7 +41,6 @@ object JobRunner {
       snapshotChunks: Int,        // ChunkSize → keyset chunk count
       triggerMs: Long,            // GroupTimeout → micro-batch trigger
       sinkPartitions: Int,        // ParallelWorkers → apply partitions
-      maxSeqsPerTrigger: Long,    // ReplChanBufferSize × group size → admission
       bulkTiers: Seq[Int],        // BulkInsert1/2/3 → statement tiers
       sessionSetup: Seq[String],  // ForeignKeyChecks=false → SET ... = 0
       snapshotOnly: Boolean,      // SkipIncrementalCopy
@@ -63,7 +63,6 @@ object JobRunner {
       snapshotChunks = math.min(chunks, 10000L).toInt,
       triggerMs = math.max(1L, triggerSrc),
       sinkPartitions = math.max(1, t.parallelWorkers),
-      maxSeqsPerTrigger = math.max(1L, t.replChanBufferSize * math.max(1, t.groupMaxSize)),
       bulkTiers = graft.sinks.SqlBuilder.normalizeTiers(t.bulkInsertTiers),
       sessionSetup = if (t.foreignKeyChecks) Nil else Seq("SET FOREIGN_KEY_CHECKS = 0"),
       snapshotOnly = t.skipIncrementalCopy,
@@ -157,7 +156,7 @@ object JobRunner {
   }
 }
 
-class JobRunner(spark: SparkSession, repl: ReplicationSpec) {
+class JobRunner(spark: SparkSession, repl: ReplicationSpec, triggerMs: Long = 1000L) {
 
   /** Result of a table snapshot: rows written + the watermark (max seq
     * observed) where the incremental phase takes over — the reference's
@@ -198,7 +197,7 @@ class JobRunner(spark: SparkSession, repl: ReplicationSpec) {
                   watermark: Long = 0L, seqCol: String = "seq"): StreamingQuery = {
     val fromWatermark =
       if (watermark > 0L) changes.filter(col(seqCol) > watermark) else changes
-    CdcPipeline.run(fromWatermark, repl, sink, checkpointDir)
+    CdcPipeline.run(fromWatermark, repl, sink, checkpointDir, triggerMs)
   }
 
   /** Incremental phase with the full K5+C9 control path wired in — the
@@ -228,7 +227,7 @@ class JobRunner(spark: SparkSession, repl: ReplicationSpec) {
     val fromWatermark =
       if (watermark > 0L) changes.filter(col(seqCol) > watermark) else changes
     CdcPipeline.run(fromWatermark, repl,
-      JobRunner.charsetDecodingSink(sink, registry), checkpointDir,
+      JobRunner.charsetDecodingSink(sink, registry), checkpointDir, triggerMs,
       ddlHandler = Some(ddlBarrierHandler(registry, onDdlForward,
         characterSetClient, lowerCaseTableNames, registryPath, onSchemaChanged)))
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Partitioning.pinned
 
 /** Scale-behavior probe: times the LLM-pipeline operators on k× unions
   * of the documents/embeddings fixtures (perturbed ids, salted text →
@@ -76,13 +77,12 @@ object ScaleProbe {
       }
     }
 
-    for (k <- ks) {
+    for (k <- ks) pinned { pins =>
       // lazy: a filtered run only materializes the scaled frames the
       // selected ops actually read (frame setup dominates iteration cost)
-      var dUsed = false; var eUsed = false; var vUsed = false
-      lazy val d = { dUsed = true; scaleDocs(docs, k).localCheckpoint(true) }
-      lazy val e = { eUsed = true; scaleEmb(emb, k).localCheckpoint(true) }
-      lazy val v = scaleEvents(events, k).localCheckpoint(true)
+      lazy val d = pins.checkpoint(scaleDocs(docs, k))
+      lazy val e = pins.checkpoint(scaleEmb(emb, k))
+      lazy val v = pins.checkpoint(scaleEvents(events, k))
       time("pack_sequences", k) {
         operators.SeqPacking.pack(d, "doc_id", "text", "source", 512).toDF()
       }
@@ -165,7 +165,7 @@ object ScaleProbe {
         time("dedup_minhash_index_build", k) {
           val (bands, sigs) = operators.dedup.MinHashDedup.buildPortableIndex(
             d, "doc_id", "text", n = 3, k = 16, numBands = 4)
-          built = (bands.localCheckpoint(true), sigs.localCheckpoint(true))
+          built = (pins.checkpoint(bands), pins.checkpoint(sigs))
           built._1.union(built._1.limit(0)) // materialized above; noop write below
         }
         if (built != null) {
@@ -174,7 +174,7 @@ object ScaleProbe {
               docs.filter(pmod(col("doc_id"), lit(10)) === 0), "doc_id", "text",
               n = 3, k = 16, numBands = 4, threshold = 0.5, maxBucket = 500)
           }
-          built._1.unpersist(); built._2.unpersist()
+          pins.release(built._1); pins.release(built._2)
         }
       }
       time("dedup_minhash_portable", k) {
@@ -345,16 +345,14 @@ object ScaleProbe {
           k = 5, dim = 64, nBits = 8, tables = 4)
       }
       time("stats_active_users", k) {
-        val ev = { vUsed = true; v }
-        operators.TableStats.activeUsers(ev, "ts", "user_id")
+        operators.TableStats.activeUsers(v, "ts", "user_id")
       }
       time("pipeline_replicate", k) {
         // the CDC flagship at k× stream length and k× key count:
         // snapshot handoff + idempotence + upsert + interval ledger
-        val ev = { vUsed = true; v }
-        val cutoff = ev.agg(max(col("event_id"))).head().getLong(0) / 2
+        val cutoff = v.agg(max(col("event_id"))).head().getLong(0) / 2
         operators.Replication.replicate(
-          ev.withColumn("op",
+          v.withColumn("op",
             when(col("event_type") === "error", "d")
               .when(col("event_type") === "signup", "i").otherwise("u")),
           "user_id", "event_id", "op", cutoff, cutoff - cutoff / 4)
@@ -368,19 +366,17 @@ object ScaleProbe {
         // k× events against k×/10 checkpoint rows, both sides growing:
         // the union+window shape should scale with the single key
         // shuffle (event_id doubles as the monotone event time)
-        val ev = { vUsed = true; v }
-        val ckpts = ev.filter(pmod(col("event_id"), lit(10)) === 0)
+        val ckpts = v.filter(pmod(col("event_id"), lit(10)) === 0)
           .select(col("user_id").as("ck_user"), col("event_id").as("ck_seq"),
             col("event_id").as("ckpt_id"))
-        operators.AsOfJoin.asOf(ev, ckpts, "user_id", "ck_user",
+        operators.AsOfJoin.asOf(v, ckpts, "user_id", "ck_user",
           "event_id", "ck_seq", payload = Seq("ckpt_id"))
       }
       time("range_join", k) {
         // k× points against 1000k irregular, overlapping intervals —
         // far past broadcast comfort at high k; the bucket chunking
         // must keep this an equi-join
-        val ev = { vUsed = true; v }
-        val pts = ev.select(col("event_id"),
+        val pts = v.select(col("event_id"),
           pmod(col("event_id") * 2654435761L, lit(50000)).cast("double").as("x"))
         val iv = spark.range(1000L * k).select(col("id").as("iv_id"),
           (pmod(col("id") * 7919, lit(997)) * 50.0).as("lo"),
@@ -889,9 +885,6 @@ object ScaleProbe {
           operators.CrawlScheduler.capPerDomain(frontier, "domain", "url", col("priority"), 100),
           "domain", "url", 16, lit(1000L))
       }
-      if (dUsed) d.unpersist()
-      if (eUsed) e.unpersist()
-      if (vUsed) v.unpersist()
     }
     only.foreach { f =>
       val unknown = f -- seenOps

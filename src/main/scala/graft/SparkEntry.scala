@@ -6086,7 +6086,7 @@ object SparkEntry {
     // batch × stored-fingerprint-index probe; block cap on INDEX side
     "dedup_simhash_incremental" ->
       """WITH w AS (SELECT doc_id, string_split(lower(trim(regexp_replace(text, '[\s\x0b]+', ' ', 'g'))), ' ') AS words
-        |  FROM documents),
+        |  FROM documents WHERE text IS NOT NULL),
         |h AS (SELECT doc_id, list_transform(words, t -> ('0x' || substr(md5(t), 1, 15))::BIGINT) AS hs FROM w),
         |v AS (SELECT doc_id, list_transform(range(0, 60), b ->
         |    list_sum(list_transform(hs, x -> ((x >> b) & 1) * 2 - 1))) AS votes FROM h),
@@ -6102,9 +6102,10 @@ object SparkEntry {
         |  FROM bat JOIN idx ON bat.block_idx = idx.block_idx AND bat.block_val = idx.block_val)
         |SELECT doc_id, dup_of, hamming FROM p WHERE hamming <= 3 ORDER BY doc_id, dup_of""".stripMargin,
 
+    // NULL text has no fingerprint (as in SimHashDedup), not fingerprint 0
     "dedup_simhash" ->
       """WITH w AS (SELECT doc_id, string_split(lower(trim(regexp_replace(text, '[\s\x0b]+', ' ', 'g'))), ' ') AS words
-        |  FROM documents),
+        |  FROM documents WHERE text IS NOT NULL),
         |h AS (SELECT doc_id, list_transform(words, t -> ('0x' || substr(md5(t), 1, 15))::BIGINT) AS hs FROM w),
         |v AS (SELECT doc_id, list_transform(range(0, 60), b ->
         |    list_sum(list_transform(hs, x -> ((x >> b) & 1) * 2 - 1))) AS votes FROM h),

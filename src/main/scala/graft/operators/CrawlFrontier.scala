@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Partitioning.pinned
 
 /** Persistent crawl-frontier maintenance — the seen-set as a STORED,
   * sharded url-hash index probed per discovery batch, never a
@@ -133,25 +134,8 @@ object CrawlFrontier {
             p.getName.matches("current-\\d{8}(\\.tmp)?"))
           .foreach(fs.delete(_, true))
       }
-      // one row per url: a url re-crawled in history keeps its LATEST
-      // clock. Materialized once — the urls write AND the bloom build
-      // both consume it, and Catalyst shares no subtrees, so the
-      // history aggregation ran twice per build (guide §5)
-      val urls = graft.operators.Partitioning.materializeOnce(crawled
-        .groupBy(col(urlCol).as("url"))
-        .agg(max(lastCrawlCol).as("last_crawl"))
-        .select(md5(col("url")).as("url_md5"), col("url"), col("last_crawl"),
-          shardCol("url", nShards).as("shard")))
-      // cluster by shard before the partitioned write: without it every
-      // upstream task writes one file into every shard dir it touches
-      // (tasks × shards tiny files per build/append — the small-file
-      // failure mode the probe side then pays on every pruned read)
-      try {
-        urls.repartition(col("shard"))
-          .write.mode("overwrite").partitionBy("shard").parquet(s"$dir/urls")
-        writeBloom(spark, s"$dir/bloom", urls.select(col("url")), nShards, expectedItems,
-          overwrite = true)
-      } finally urls.unpersist()
+      writeUrls(crawled, urlCol, lastCrawlCol, nShards, expectedItems,
+        s"$dir/urls", s"$dir/bloom", overwrite = true)
       spark.createDataFrame(Seq((nShards, expectedItems)))
         .toDF("n_shards", "expected_items")
         .write.mode("overwrite").parquet(s"$dir/meta")
@@ -179,21 +163,8 @@ object CrawlFrontier {
     withWriterLock(spark, dir) {
       val (nShards, expectedItems) = readMeta(spark, dir)
       val (urlsDir, bloomDir) = resolveDirs(spark, dir)
-      // materialized once: the shard write and the bloom build both
-      // consume the batch aggregation (see buildIndex)
-      val urls = graft.operators.Partitioning.materializeOnce(newlyCrawled
-        .groupBy(col(urlCol).as("url"))
-        .agg(max(lastCrawlCol).as("last_crawl"))
-        .select(md5(col("url")).as("url_md5"), col("url"), col("last_crawl"),
-          shardCol("url", nShards).as("shard")))
-      // shard-clustered append — one file per touched shard per batch,
-      // not one per (task, shard) pair (see buildIndex)
-      try {
-        urls.repartition(col("shard"))
-          .write.mode("append").partitionBy("shard").parquet(urlsDir)
-        writeBloom(spark, bloomDir, urls.select(col("url")), nShards, expectedItems,
-          overwrite = false)
-      } finally urls.unpersist()
+      writeUrls(newlyCrawled, urlCol, lastCrawlCol, nShards, expectedItems,
+        urlsDir, bloomDir, overwrite = false)
       compactBloom(spark, dir, nShards)
     }
   }
@@ -384,46 +355,44 @@ object CrawlFrontier {
       accept: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
     (batch: DataFrame, epochId: Long) => {
       val spark = batch.sparkSession
-      val cached = batch.persist() // stable relation for the two probe passes
-      try {
-        // STAGE the accepted set durably BEFORE touching the index: the
-        // accepted frame's lazy plan probes the index, so if it were
-        // re-evaluated after appendBatch (cache-block loss on executor
-        // failure), it would find its own URLs indexed and recompute to
-        // EMPTY — indexed-but-never-delivered, the silent-loss shape.
-        //
-        // On REPLAY a committed staging dir for this epoch is
-        // RE-DELIVERED, never recomputed: a crash after appendBatch
-        // would otherwise make the replay's probe find its own URLs
-        // indexed and overwrite the good staging data with an empty
-        // frame — the same loss through the other door. Re-running
-        // appendBatch on the re-delivered frame is safe (duplicate
-        // rows are membership-harmless; compactIndex reclaims them)
-        // and heals the crash-between-urls-and-bloom window too.
-        val staging = s"$dir/staging/epoch-$epochId"
-        val hconf = spark.sessionState.newHadoopConf()
-        val marker = new org.apache.hadoop.fs.Path(staging, "_SUCCESS")
-        val fs = marker.getFileSystem(hconf)
-        if (!fs.exists(marker)) {
-          probeNew(spark, dir, cached, urlCol)
-            .write.mode("overwrite").parquet(staging)
+      // STAGE the accepted set durably BEFORE touching the index: the
+      // accepted frame's lazy plan probes the index, so if it were
+      // re-evaluated after appendBatch (cache-block loss on executor
+      // failure), it would find its own URLs indexed and recompute to
+      // EMPTY — indexed-but-never-delivered, the silent-loss shape.
+      //
+      // On REPLAY a committed staging dir for this epoch is
+      // RE-DELIVERED, never recomputed: a crash after appendBatch
+      // would otherwise make the replay's probe find its own URLs
+      // indexed and overwrite the good staging data with an empty
+      // frame — the same loss through the other door. Re-running
+      // appendBatch on the re-delivered frame is safe (duplicate
+      // rows are membership-harmless; compactIndex reclaims them)
+      // and heals the crash-between-urls-and-bloom window too.
+      val staging = s"$dir/staging/epoch-$epochId"
+      val hconf = spark.sessionState.newHadoopConf()
+      val marker = new org.apache.hadoop.fs.Path(staging, "_SUCCESS")
+      val fs = marker.getFileSystem(hconf)
+      if (!fs.exists(marker)) pinned { pins =>
+        // the pinned batch is one stable relation for the probe's passes
+        probeNew(spark, dir, pins.once(batch), urlCol)
+          .write.mode("overwrite").parquet(staging)
+      }
+      val accepted = spark.read.parquet(staging)
+      appendBatch(accepted, urlCol, lastCrawlCol, dir)
+      accept(accepted, epochId)
+      // retention: replay only ever needs THIS epoch's staging dir —
+      // drop older ones so a long-running stream doesn't accumulate
+      // unbounded small-file dirs
+      val stagingRoot = new org.apache.hadoop.fs.Path(s"$dir/staging")
+      if (fs.exists(stagingRoot)) {
+        fs.listStatus(stagingRoot).foreach { st =>
+          val name = st.getPath.getName
+          if (name.startsWith("epoch-") &&
+            scala.util.Try(name.stripPrefix("epoch-").toLong).toOption.exists(_ < epochId))
+            fs.delete(st.getPath, true)
         }
-        val accepted = spark.read.parquet(staging)
-        appendBatch(accepted, urlCol, lastCrawlCol, dir)
-        accept(accepted, epochId)
-        // retention: replay only ever needs THIS epoch's staging dir —
-        // drop older ones so a long-running stream doesn't accumulate
-        // unbounded small-file dirs
-        val stagingRoot = new org.apache.hadoop.fs.Path(s"$dir/staging")
-        if (fs.exists(stagingRoot)) {
-          fs.listStatus(stagingRoot).foreach { st =>
-            val name = st.getPath.getName
-            if (name.startsWith("epoch-") &&
-              scala.util.Try(name.stripPrefix("epoch-").toLong).toOption.exists(_ < epochId))
-              fs.delete(st.getPath, true)
-          }
-        }
-      } finally cached.unpersist()
+      }
     }
 
   /** Collapse 3xx redirect chains to their terminal URL by POINTER
@@ -441,14 +410,14 @@ object CrawlFrontier {
     * runs ⌈log₂(maxHops+1)⌉ rounds — 5 shuffles guarantee the 16-hop
     * cap rather than 16 sequential joins; each join is hash-keyed on
     * the URL, nothing is collected or broadcast.
-    * `localCheckpoint` truncates the growing lineage each round (the
-    * same iterative-plan discipline as
+    * A checkpoint truncates the growing lineage each round and the
+    * superseded round releases (the same iterative-plan discipline as
     * [[graft.operators.dedup.Dedup.connectedComponents]]). A Location
     * target that was never fetched terminates its chain (the frontier
     * fetches it next turn).
     */
   def resolveRedirects(fetches: DataFrame, urlCol: String, locationCol: String,
-      maxHops: Int = 16): DataFrame = {
+      maxHops: Int = 16): DataFrame = pinned { pins =>
     require(maxHops >= 1, "maxHops must be at least 1")
     var j = fetches.select(
       col(urlCol).as("url"),
@@ -461,17 +430,18 @@ object CrawlFrontier {
         col("hops").as("r_hops"), col("done").as("r_done"))
       val stepped = j.join(r.hint("shuffle_hash"), j("reach") === r("r_url"), "left")
       // a reach with no row of its own is an unfetched target → terminal
-      j = stepped.select(
+      val prev = j
+      j = pins.checkpoint(stepped.select(
         col("url"),
         when(col("done") || col("r_url").isNull, col("reach"))
           .otherwise(col("r_reach")).as("reach"),
         when(col("done") || col("r_url").isNull, col("hops"))
           .otherwise(col("hops") + col("r_hops")).as("hops"),
-        (col("done") || col("r_url").isNull || col("r_done")).as("done"))
-        .localCheckpoint()
+        (col("done") || col("r_url").isNull || col("r_done")).as("done")))
+      pins.release(prev)
       confirmed = confirmed * 2 + 1
     }
-    j.select(col("url"), col("reach").as("final_url"), col("hops"),
+    pins.keep(j).select(col("url"), col("reach").as("final_url"), col("hops"),
       col("done").as("resolved"))
   }
 
@@ -626,6 +596,28 @@ object CrawlFrontier {
 
   private def parquetDirEmpty(spark: SparkSession, dir: String): Boolean =
     parquetRowCount(spark, dir) == 0L
+
+  /** The build/append write path: one row per url (a url re-crawled in
+    * history keeps its LATEST clock) into `urlsDir` plus its sketch rows
+    * into `bloomDir`. The aggregate is pinned: the urls write AND the
+    * bloom build both consume it, and Catalyst shares no subtrees (guide
+    * §5). Clustering by shard before the partitioned write keeps one
+    * file per touched shard, not one per (task, shard) pair — the
+    * small-file failure mode every pruned probe would pay.
+    */
+  private def writeUrls(crawled: DataFrame, urlCol: String, lastCrawlCol: Column,
+      nShards: Int, expectedItems: Long, urlsDir: String, bloomDir: String,
+      overwrite: Boolean): Unit = pinned { pins =>
+    val urls = pins.once(crawled
+      .groupBy(col(urlCol).as("url"))
+      .agg(max(lastCrawlCol).as("last_crawl"))
+      .select(md5(col("url")).as("url_md5"), col("url"), col("last_crawl"),
+        shardCol("url", nShards).as("shard")))
+    urls.repartition(col("shard")).write.mode(if (overwrite) "overwrite" else "append")
+      .partitionBy("shard").parquet(urlsDir)
+    writeBloom(crawled.sparkSession, bloomDir, urls.select(col("url")), nShards,
+      expectedItems, overwrite)
+  }
 
   /** One sketch row per TOUCHED shard: `(shard, bf)`, each sketch sized
     * for its `expectedItems / nShards` slice. Sketches of the same

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Partitioning.pinned
 
 /** Link-graph centrality for crawl-frontier prioritization — the
   * priority signal [[CrawlScheduler.capPerDomain]] ranks by: a host
@@ -46,7 +47,7 @@ import org.apache.spark.sql.functions._
 object LinkGraph {
 
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int = 10, dampingMicros: Long = 850000L): DataFrame = {
+      iterations: Int = 10, dampingMicros: Long = 850000L): DataFrame = pinned { pins =>
     require(iterations >= 1, "need at least one iteration")
     require(dampingMicros > 0 && dampingMicros < 1000000L,
       s"dampingMicros $dampingMicros out of (0, 1000000)")
@@ -62,16 +63,14 @@ object LinkGraph {
     val g = java.math.BigInteger.valueOf(dampingMicros)
       .gcd(java.math.BigInteger.valueOf(1000000L)).longValueExact()
     val (dNum, dDen) = (dampingMicros / g, 1000000L / g)
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e = pins.checkpoint(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val withDeg = e.join(outdeg, "src").localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
+    val withDeg = pins.checkpoint(e.join(outdeg, "src"))
+    val nodes = pins.checkpoint(e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     var ranks = nodes.withColumn("rank_micros", lit(1000000L))
     // the left-join-back that re-attached no-inlink nodes (an extra
     // exchange + join per iteration) folds into the dst-keyed
@@ -83,21 +82,19 @@ object LinkGraph {
     var i = 0
     while (i < iterations) {
       val prev = ranks
-      ranks = withDeg
+      ranks = pins.checkpoint(withDeg
         .join(ranks, withDeg("src") === ranks("node"))
         .select(col("dst"),
           expr(s"(rank_micros * $dNum div $dDen) div outdeg").as("c"))
         .unionByName(zeroRows)
         .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
         .select(col("dst").as("node"),
-          (lit(teleport) + col("inflow")).as("rank_micros"))
-        .localCheckpoint() // eager: materialized before prev releases
-      prev.unpersist() // superseded checkpoint blocks must not pile up
+          (lit(teleport) + col("inflow")).as("rank_micros")))
+      pins.release(prev) // superseded round: its blocks must not pile up
       i += 1
     }
-    // the returned frame is its own checkpoint — the working tables
-    // can release now instead of squatting in executor storage
-    e.unpersist(); withDeg.unpersist(); nodes.unpersist()
-    ranks
+    // the returned frame is the last round's checkpoint — the working
+    // tables release with the scope instead of squatting in storage
+    pins.keep(ranks)
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Partitioning helpers shared by CPU-heavy operators.
@@ -18,54 +19,76 @@ object Partitioning {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
-  /** Materialize a multiply-consumed derived table ONCE (persist + an
-    * eager count), so each downstream consumer reads the cache instead
-    * of re-deriving the whole subtree.
+  /** The one place graft pins data: runs `body`, then releases every pin
+    * it handed out in a `finally`, so a failed body (a failed write, a
+    * replayed micro-batch) releases too — in a long-lived session a pin
+    * that outlives its call stays held until a JVM GC.
     *
-    * Why not rely on the planner: Catalyst does not share duplicate
-    * subtrees inside one plan, and AQE's stage cache only deduplicates
-    * exchanges whose canonical form matches — a derived table consumed
-    * under three DIFFERENT keys (banding, join on id_a, join on id_b)
-    * recomputes per consumer (measured: the minhash signature pipeline
-    * — full text scan + per-shingle md5 — ran 3× per dedup_minhash).
-    *
-    * Why persist over localCheckpoint: persist keeps lineage, so a lost
-    * executor recomputes its partitions — localCheckpoint would fail
-    * the job, a real risk on a 1000-executor run. MEMORY_AND_DISK:
-    * index-shaped tables (k longs per doc) spill rather than OOM. The
-    * eager count prevents the concurrent-stage race where AQE
-    * materializes the consumers' independent stages in parallel, each
-    * missing the cache and re-deriving.
+    * Release rule: what leaves the scope must not read a released
+    * checkpoint (that read fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).
+    * It is a collected value, a finished write, an output
+    * `localCheckpoint` taken inside the scope, or a [[Pins.keep]]
+    * checkpoint. A released `once` pin may back a lazy result; its plan
+    * recomputes it from lineage.
     */
-  def materializeOnce(df: DataFrame): DataFrame = {
-    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cached.count()
-    cached
+  def pinned[T](body: Pins => T): T = {
+    val pins = new Pins
+    try body(pins) finally pins.releaseAll()
   }
 
-  /** Eager-terminal companion to [[materializeOnce]] for operators whose
-    * OUTPUT is small relative to the corpus (near-dup pair lists, top-k
-    * tables, curated survivors): compute the output NOW via an eager
-    * localCheckpoint, then release the pins before returning — also
-    * when the checkpoint throws. Without
-    * this, a lazy-returning operator's pins outlive the call — the
-    * caller cannot unpersist blocks it never saw, and a long-lived
-    * session making repeated calls (per-batch percolation, a bench/fuzz
-    * harness) accumulates cached blocks until LRU eviction.
-    *
-    * Why localCheckpoint for the output rather than another persist:
-    * checkpoint blocks never register in the session CacheManager and
-    * are reaped by the ContextCleaner as soon as the returned frame is
-    * garbage-collected — no explicit release protocol needed. The
-    * trade: lineage is truncated, so an executor lost between here and
-    * consumption fails the job instead of recomputing. That is
-    * acceptable ONLY because the checkpointed table is output-bound
-    * (pair/top-k sized), making the exposure window short; corpus-sized
-    * intermediates must keep [[materializeOnce]]'s lineage-preserving
-    * persist and live inside such an eager scope.
-    */
-  def releasePinsAfter(out: DataFrame, pins: DataFrame*): DataFrame =
-    try out.localCheckpoint(true) finally pins.foreach(_.unpersist())
+  final class Pins private[Partitioning] {
+    private val held = scala.collection.mutable.ArrayBuffer.empty[(DataFrame, () => Unit)]
+
+    /** Persist MEMORY_AND_DISK + an eager count, so a derived table with
+      * several consumers is computed once. Catalyst shares no duplicate
+      * subtrees and AQE reuses only canonically equal exchanges, so a
+      * table consumed under different keys re-derives per consumer (the
+      * minhash signatures ran 3× per dedup_minhash). Persist keeps
+      * lineage: a lost executor recomputes, where a checkpoint would fail
+      * the job. The count closes the race where AQE runs the consumers'
+      * stages concurrently, each missing the cache.
+      */
+    def once(df: DataFrame): DataFrame = {
+      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      held += (p -> (() => { p.unpersist(); () }))
+      p.count()
+      p
+    }
+
+    /** Eager `localCheckpoint` (iteration state, small tables read many
+      * times). `Dataset.unpersist` does not see a checkpoint, so the pin
+      * drops the checkpointed RDD itself. A checkpoint whose own job fails
+      * is never handed out; the ContextCleaner reaps what it stored.
+      */
+    def checkpoint(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint(true)
+      val rdd = c.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+      held += (c -> (() => { rdd.unpersist(blocking = false); () }))
+      c
+    }
+
+    /** Drop a superseded pin now; a frame this scope did not pin is left alone. */
+    def release(df: DataFrame): Unit = {
+      val i = held.indexWhere(_._1 eq df)
+      if (i >= 0) held.remove(i)._2()
+    }
+
+    /** Hand a [[checkpoint]] pin out of the scope as its output; the
+      * ContextCleaner reaps it with the caller's frame.
+      */
+    def keep(df: DataFrame): DataFrame = {
+      val i = held.indexWhere(_._1 eq df)
+      require(i >= 0 && df.queryExecution.logical.isInstanceOf[LogicalRDD],
+        "keep takes a checkpoint pin of this scope")
+      held.remove(i)
+      df
+    }
+
+    private[Partitioning] def releaseAll(): Unit = {
+      held.reverseIterator.foreach(_._2())
+      held.clear()
+    }
+  }
 
   /** Salted two-level aggregation for skewed grouping keys (SURVEY.md
     * §4: "skewed keys → salting or AQE skew-join"). A key holding a

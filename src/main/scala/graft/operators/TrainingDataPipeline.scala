@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Partitioning.pinned
 import graft.operators.dedup.Dedup
 import graft.operators.text.TextAnalysis
 
@@ -26,17 +27,13 @@ object TrainingDataPipeline {
   def curate(docs: DataFrame, idCol: String, textCol: String,
              minQuality: Double = 0.5, jaccardThreshold: Double = 0.5,
              shingleN: Int = 3, maxShingleDf: Int = 1000): DataFrame = {
-    val (uniq, dropIds) = curateStages(docs, idCol, textCol,
-      minQuality, jaccardThreshold, shingleN, maxShingleDf)
-    // Release the working-set pin HERE rather than leaking it into the
-    // session cache (the returned frame is lazy; the caller could never
-    // unpersist a pin it cannot see). The final left_anti then
-    // re-derives the gate+fingerprint subtree ONCE more — one extra
-    // pass, bought back by a lineage-complete, corpus-sized output
-    // that a checkpoint would have frozen into non-recomputable blocks.
-    // If the output goes straight to storage anyway, [[curateTo]] keeps
-    // the pin through the write and skips that extra pass.
-    uniq.unpersist()
+    // The working-set pin releases HERE (the caller could never release
+    // a pin it cannot see), so the lazy left_anti re-derives the
+    // gate+fingerprint subtree once more — the price of a corpus-sized
+    // output that stays lineage-complete instead of frozen into
+    // checkpoint blocks. [[curateTo]] keeps the pin through its write.
+    val (uniq, dropIds) = pinned(curateStages(_, docs, idCol, textCol,
+      minQuality, jaccardThreshold, shingleN, maxShingleDf))
 
     // 5. keep cluster representatives (and everything unpaired)
     uniq.join(dropIds, uniq(idCol) === dropIds("__drop"), "left_anti")
@@ -55,20 +52,21 @@ object TrainingDataPipeline {
                minQuality: Double = 0.5, jaccardThreshold: Double = 0.5,
                shingleN: Int = 3, maxShingleDf: Int = 1000,
                mode: String = "overwrite"): DataFrame = {
-    val (uniq, dropIds) = curateStages(docs, idCol, textCol,
-      minQuality, jaccardThreshold, shingleN, maxShingleDf)
-    uniq.join(dropIds, uniq(idCol) === dropIds("__drop"), "left_anti")
-      .select(col(idCol), col("lang_pred"), col("quality"))
-      .write.mode(mode).parquet(outPath)
-    uniq.unpersist()
+    pinned { pins =>
+      val (uniq, dropIds) = curateStages(pins, docs, idCol, textCol,
+        minQuality, jaccardThreshold, shingleN, maxShingleDf)
+      uniq.join(dropIds, uniq(idCol) === dropIds("__drop"), "left_anti")
+        .select(col(idCol), col("lang_pred"), col("quality"))
+        .write.mode(mode).parquet(outPath)
+    }
     docs.sparkSession.read.parquet(outPath)
   }
 
   /** Steps 1–4 shared by [[curate]] and [[curateTo]]: returns the
-    * PINNED exact-unique survivors and the eager (small) drop-set of
-    * near-dup non-representatives. The caller owns the pin's release.
+    * exact-unique survivors, pinned in the caller's scope, and the
+    * eager (small) drop-set of near-dup non-representatives.
     */
-  private def curateStages(docs: DataFrame, idCol: String, textCol: String,
+  private def curateStages(pins: Partitioning.Pins, docs: DataFrame, idCol: String, textCol: String,
                            minQuality: Double, jaccardThreshold: Double,
                            shingleN: Int, maxShingleDf: Int): (DataFrame, DataFrame) = {
     // 1. profile gate
@@ -83,7 +81,7 @@ object TrainingDataPipeline {
     // fingerprint window re-derive per consumer. This cache is the
     // working set steps 3-5 iterate over (the Spark ML fit() pattern);
     // MEMORY_AND_DISK spills on corpora past executor memory.
-    val uniq = graft.operators.Partitioning.materializeOnce(gated
+    val uniq = pins.once(gated
       .withColumn("__keep", min(col(idCol)).over(Window.partitionBy(col("fingerprint"))))
       .filter(col(idCol) === col("__keep"))
       .drop("__keep"))

@@ -2,11 +2,14 @@ package graft.operators.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Partitioning.pinned
 
 /** Deduplication operators for training-data pipelines (beyond-parity,
   * SURVEY.md §8). All candidate generation is bucketed — never an
   * unbucketed O(n²) cross join — so each operator survives a 100×
   * scale-up: the only shuffles are hash-partitioned on content keys.
+  * Its `graft_*` functions resolve through `call_function`: the session
+  * needs [[graft.plans.GraftExtensions]], which [[graft.GraftSession.build]] adds.
   */
 object Dedup {
 
@@ -309,26 +312,25 @@ object Dedup {
   /** Full transitive dedup clusters: min-label propagation over the
     * near-dup pair graph until fixpoint (bounded by `maxIters` —
     * iterations needed = graph diameter, and near-dup graphs are
-    * shallow). Each iteration is one hash join + aggregate;
-    * `localCheckpoint` truncates the growing lineage so iteration N
+    * shallow). Each iteration is one hash join + aggregate; a
+    * checkpoint per round truncates the growing lineage so iteration N
     * doesn't replan/replay iterations 1..N-1 — the standard iterative-
-    * algorithm discipline on Spark. Output: (node, cluster) where
-    * cluster = min doc id reachable through pairs.
+    * algorithm discipline on Spark — and the superseded round releases
+    * at once. Output: (node, cluster) where cluster = min doc id
+    * reachable through pairs; it is the last round's checkpoint.
     */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-                          maxIters: Int = 20): DataFrame = {
+                          maxIters: Int = 20): DataFrame = pinned { pins =>
     // `pairs` is usually a whole candidate pipeline (ngram/minhash);
     // referencing it from both union branches would derive it twice
     // inside the one eager checkpoint — materialize the slim edge list
     // first, reverse the cached rows, release once edges are pinned
-    val p = graft.operators.Partitioning.materializeOnce(
-      pairs.select(col(idA).as("src"), col(idB).as("dst")))
-    val edges = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
-    p.unpersist()
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("cluster", col("node"))
-      .localCheckpoint(true)
+    val p = pins.once(pairs.select(col(idA).as("src"), col(idB).as("dst")))
+    val edges = pins.checkpoint(
+      p.union(p.select(col("dst").as("src"), col("src").as("dst"))))
+    pins.release(p)
+    var labels = pins.checkpoint(edges.select(col("src").as("node")).distinct()
+      .withColumn("cluster", col("node")))
     var i = 0
     var converged = false
     while (!converged && i < maxIters) {
@@ -346,11 +348,12 @@ object Dedup {
           col("x.cluster") === col("y.ln"), "left")
         .select(col("x.node").as("node"),
           least(col("x.cluster"), coalesce(col("lc"), col("x.cluster"))).as("cluster"))
-      val updated = viaLabels.localCheckpoint(true)
+      val updated = pins.checkpoint(viaLabels)
       val noChange = updated.as("u")
         .join(labels.withColumnRenamed("cluster", "old").as("l"), "node")
         .filter(col("cluster") =!= col("old"))
         .isEmpty
+      pins.release(labels) // superseded round: its blocks must not pile up
       labels = updated
       converged = noChange
       i += 1
@@ -361,7 +364,7 @@ object Dedup {
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIters iterations " +
           "(component label depth still shrinking); raise maxIters")
-    labels
+    pins.keep(labels)
   }
 
   /** Persistable exact-prefix-join index: the continual-ingest form of

@@ -2,6 +2,7 @@ package graft.operators.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Partitioning.pinned
 
 /** MinHash + LSH near-duplicate detection (beyond-parity, SURVEY.md §8):
   * shingle → minhash signature → band → bucket-join, the standard
@@ -17,6 +18,8 @@ import org.apache.spark.sql.functions._
   *    in degenerate corpora.
   *  - Estimated Jaccard from signature agreement verifies candidates
   *    without re-reading text.
+  * Its `graft_*` functions resolve through `call_function`: the session
+  * needs [[graft.plans.GraftExtensions]], which [[graft.GraftSession.build]] adds.
   */
 object MinHashDedup {
 
@@ -61,12 +64,11 @@ object MinHashDedup {
     */
   def portablePairs(docs: DataFrame, idCol: String, textCol: String,
                     n: Int = 3, k: Int = 16, numBands: Int = 4,
-                    threshold: Double = 0.5, maxBucket: Int = 500): DataFrame = {
+                    threshold: Double = 0.5, maxBucket: Int = 500): DataFrame = pinned { pins =>
     // Signatures feed three consumers (banding, the id_a join, the id_b
     // join); materialized once or the text-scan+md5 pipeline runs 3×
-    // (Partitioning.materializeOnce scaladoc has the measurements).
-    val sig = graft.operators.Partitioning.materializeOnce(
-      portableSignatures(docs, idCol, textCol, n, k))
+    // (Partitioning.Pins.once scaladoc has the measurements).
+    val sig = pins.once(portableSignatures(docs, idCol, textCol, n, k))
     // Buckets carry ONLY doc ids (8 bytes/member through the shuffle) —
     // at k=64 a (doc_id, sig) struct is 520B/member; signatures re-join
     // by id AFTER pair dedup, when the pair set is small, pinned
@@ -88,9 +90,9 @@ object MinHashDedup {
           .cast("double") / k)
       .filter(col("sig_frac") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("sig_frac"), 6).as("sig_frac"))
-    // pair-sized output: eager checkpoint, then drop the signature pin
-    // (Partitioning.releasePinsAfter scaladoc has the lifecycle contract)
-    graft.operators.Partitioning.releasePinsAfter(out, sig)
+    // pair-sized output: eager checkpoint before the signature pin drops
+    // (Partitioning.pinned scaladoc has the release rule)
+    out.localCheckpoint(true)
   }
 
   /** Ordered intra-bucket pairs via two chained `explode`s (both fully
@@ -128,10 +130,9 @@ object MinHashDedup {
   def nearDupAgainstIndex(idxBands: DataFrame, idxSigs: DataFrame,
                           batch: DataFrame, idCol: String, textCol: String,
                           n: Int = 3, k: Int = 16, numBands: Int = 4,
-                          threshold: Double = 0.5, maxBucket: Int = 500): DataFrame = {
+                          threshold: Double = 0.5, maxBucket: Int = 500): DataFrame = pinned { pins =>
     // batch sigs feed banding AND the batch_id score join — once
-    val bSig = graft.operators.Partitioning.materializeOnce(
-      portableSignatures(batch, idCol, textCol, n, k))
+    val bSig = pins.once(portableSignatures(batch, idCol, textCol, n, k))
     val bBands = portableBands(bSig, k, numBands)
     // capped collect on the INDEX side: the bounded buffer holds
     // maxBucket+1 on overflow, so the filter detects and drops hot
@@ -155,8 +156,6 @@ object MinHashDedup {
       .filter(col("sig_frac") >= threshold)
       .select(col("batch_id").as("doc_id"), col("index_id").as("dup_of"),
         round(col("sig_frac"), 6).as("sig_frac"))
-    // this runs once per incoming batch in the streaming percolator —
-    // exactly the call shape that leaked a pin per batch before
-    graft.operators.Partitioning.releasePinsAfter(out, bSig)
+    out.localCheckpoint(true) // batch-sized output
   }
 }

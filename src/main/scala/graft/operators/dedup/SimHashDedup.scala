@@ -16,6 +16,8 @@ import org.apache.spark.sql.functions._
   * into blocks; pairs within Hamming distance d must agree on at least
   * one block when blocks > d, so an equi-join per block replaces the
   * O(n²) comparison. `bit_count(a XOR b)` verifies exactly.
+  * Its `graft_*` functions resolve through `call_function`: the session
+  * needs [[graft.plans.GraftExtensions]], which [[graft.GraftSession.build]] adds.
   */
 object SimHashDedup {
 

@@ -3,6 +3,7 @@ package graft.operators.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Partitioning.pinned
 
 /** Maximal-marginal-relevance diversification (Carbonell & Goldstein
   * 1998) of a nearest-neighbor pool — the standard de-redundancy pass
@@ -34,7 +35,7 @@ object Diversify {
     * exact micro² distance to the query (double, exact below 2^53).
     */
   def mmrTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-              k: Int, pool: Int = 20): DataFrame = {
+              k: Int, pool: Int = 20): DataFrame = pinned { pins =>
     val c = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("cv"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     // exact micro-L2 pool: the corpus scans once, the query side rides
@@ -45,42 +46,39 @@ object Diversify {
     // loop AND the pool-vector re-join; pv feeds both sides of the
     // pairwise self-join — materialized once each (pool-sized tables),
     // released after greedySelect's eager output materialization
-    val poolDf = graft.operators.Partitioning.materializeOnce(scored
+    val poolDf = pins.once(scored
       .withColumn("rk", row_number().over(Window.partitionBy(col("query_id"))
         .orderBy(col("d2q").asc, col("corpus_id").asc)))
       .filter(col("rk") <= pool)
       .select(col("query_id"), col("corpus_id"), col("d2q")))
     // pool vectors: broadcast the ids-only pool into the corpus scan
-    val pv = graft.operators.Partitioning.materializeOnce(
+    val pv = pins.once(
       c.join(broadcast(poolDf.select(col("query_id"), col("corpus_id"))),
           Seq("corpus_id"))
         .select(col("query_id"), col("corpus_id"), col("cv")))
+    greedySelect(pins, poolDf, pv, k)
+  }
+
+  /** The unrolled greedy loop over a pinned pool (query_id, corpus_id,
+    * d2q) and its pinned vectors (query_id, corpus_id, cv): rank 1 =
+    * nearest to the query, each later rank the argmax of
+    * min-dist-to-selected − dist-to-query.
+    *
+    * The pool and the pairwise table are read k times, so both are
+    * pinned, and the (pool-sized) result materializes eagerly so the
+    * pins can release — a lazy result would either leak the pins for the
+    * session or recompute the whole upstream retrieval once per stage
+    * (mmrFromPool ran the hybrid pipeline O(k) times uncached).
+    */
+  private def greedySelect(pins: graft.operators.Partitioning.Pins, poolDf: DataFrame,
+      vecs: DataFrame, k: Int): DataFrame = {
     // pairwise distances within each query's pool (pool² rows/query)
-    val pw = pv.alias("a")
-      .join(pv.alias("b"), col("a.query_id") === col("b.query_id") &&
+    val pw = pins.once(vecs.alias("a")
+      .join(vecs.alias("b"), col("a.query_id") === col("b.query_id") &&
         col("a.corpus_id") =!= col("b.corpus_id"))
       .select(col("a.query_id").as("query_id"), col("a.corpus_id").as("cand"),
         col("b.corpus_id").as("sel"),
-        ProductQuantizer.microL2(col("a.cv"), col("b.cv")).as("d2p"))
-
-    val out = greedySelect(poolDf, pw, k)
-    pv.unpersist(); poolDf.unpersist()
-    out
-  }
-
-  /** The unrolled greedy loop over a prepared pool
-    * (query_id, corpus_id, d2q) and pairwise table
-    * (query_id, cand, sel, d2p): rank 1 = nearest to the query, each
-    * later rank the argmax of min-dist-to-selected − dist-to-query.
-    */
-  private def greedySelect(poolIn: DataFrame, pwIn: DataFrame, k: Int): DataFrame = {
-    // cache both tables for the k reuses, materialize the (pool-sized)
-    // result eagerly, then RELEASE them — a lazy result would either
-    // leak the cached blocks for the session or recompute the whole
-    // upstream retrieval once per stage (review catch: mmrFromPool ran
-    // the hybrid pipeline O(k) times uncached)
-    val poolDf = poolIn.cache()
-    val pw = pwIn.cache()
+        ProductQuantizer.microL2(col("a.cv"), col("b.cv")).as("d2p")))
     var selected = poolDf
       .withColumn("rk", row_number().over(Window.partitionBy(col("query_id"))
         .orderBy(col("d2q").asc, col("corpus_id").asc)))
@@ -103,13 +101,10 @@ object Diversify {
         .select(col("query_id"), col("corpus_id"), col("d2q"), lit(step).as("rank"))
       selected = selected.unionByName(next)
     }
-    val out = selected
+    selected
       .select(col("query_id"), col("rank").cast("int").as("rank"), col("corpus_id"),
         col("d2q").cast("double").as("d2"))
       .localCheckpoint(true)
-    poolDf.unpersist()
-    pw.unpersist()
-    out
   }
 
   /** MMR over an EXTERNALLY-supplied candidate pool (query_id,
@@ -122,17 +117,17 @@ object Diversify {
     * so the output can hold fewer than k rows per query.
     */
   def mmrFromPool(pool: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
-                  k: Int): DataFrame = {
+                  k: Int): DataFrame = pinned { pins =>
     // `pool` is typically a whole retrieval pipeline (hybrid RRF in
     // pipeline_rag) and is consumed twice here; poolV three times
     // (d2q, both sides of the pairwise self-join). Without
     // materialization the retrieval re-runs ~4× (the minhash lesson,
-    // Partitioning.materializeOnce). Both tables are pool-sized
+    // Partitioning.Pins.once). Both tables are pool-sized
     // (|queries|·pool rows), and greedySelect materializes its output
     // eagerly, so the pins release before returning.
-    val po = graft.operators.Partitioning.materializeOnce(pool)
+    val po = pins.once(pool)
     val c = corpus.select(col(idCol).as("vid"), col(vecCol).as("v"))
-    val poolV = graft.operators.Partitioning.materializeOnce(
+    val poolV = pins.once(
       c.join(broadcast(po), col("vid") === col("corpus_id"))
         .select(col("query_id"), col("corpus_id"), col("v").as("cv")))
     val qv = c.join(broadcast(po.select(col("query_id")).distinct()),
@@ -141,14 +136,6 @@ object Diversify {
     val poolDf = poolV.join(broadcast(qv), Seq("query_id"))
       .select(col("query_id"), col("corpus_id"),
         ProductQuantizer.microL2(col("cv"), col("qvv")).as("d2q"))
-    val pw = poolV.alias("a")
-      .join(poolV.alias("b"), col("a.query_id") === col("b.query_id") &&
-        col("a.corpus_id") =!= col("b.corpus_id"))
-      .select(col("a.query_id").as("query_id"), col("a.corpus_id").as("cand"),
-        col("b.corpus_id").as("sel"),
-        ProductQuantizer.microL2(col("a.cv"), col("b.cv")).as("d2p"))
-    val out = greedySelect(poolDf, pw, k)
-    poolV.unpersist(); po.unpersist()
-    out
+    greedySelect(pins, pins.once(poolDf), poolV, k)
   }
 }

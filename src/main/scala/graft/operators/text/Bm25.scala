@@ -3,6 +3,7 @@ package graft.operators.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Partitioning.pinned
 
 /** Okapi BM25 full-text retrieval over the corpus (beyond-parity,
   * SURVEY.md §8) — the lexical half of every RAG / data-curation
@@ -49,6 +50,8 @@ import org.apache.spark.sql.functions._
   * Reference basis: dtle has no text retrieval (this is beyond-parity);
   * formula per Robertson & Zaragoza 2009, the +1 idf per Lucene's
   * BM25Similarity.
+  * Its `graft_*` functions resolve through `call_function`: the session
+  * needs [[graft.plans.GraftExtensions]], which [[graft.GraftSession.build]] adds.
   */
 object Bm25 {
 
@@ -425,14 +428,14 @@ object Bm25 {
     */
   def prfTopK(docs: DataFrame, queries: DataFrame, idCol: String, textCol: String,
               qidCol: String, qtextCol: String, k: Int = 10, fb: Int = 5,
-              expand: Int = 3): DataFrame = {
+              expand: Int = 3): DataFrame = pinned { pins =>
     // postings (corpus tokenize + df window) feed three consumers —
     // feedback scoring, expansion mining, final scoring — and stats
     // (a corpus scan) broadcast into each: materialized once, or both
-    // derivations re-run per consumer (Partitioning.materializeOnce
-    // scaladoc has the mechanism)
-    val post = graft.operators.Partitioning.materializeOnce(postings(docs, idCol, textCol))
-    val stats = graft.operators.Partitioning.materializeOnce(corpusStats(docs, textCol))
+    // derivations re-run per consumer (Partitioning.Pins.once has the
+    // mechanism)
+    val post = pins.once(postings(docs, idCol, textCol))
+    val stats = pins.once(corpusStats(docs, textCol))
     val qt = queryTerms(queries, qidCol, qtextCol)
     val feedback = rankTopK(scores(post, stats, qt), fb)
       .select(col("query_id"), col("doc_id"))
@@ -449,9 +452,8 @@ object Bm25 {
         .orderBy(col("w").desc, col("term").asc)))
       .filter(col("rk") <= expand)
       .select(col("query_id"), col("term"))
-    // top-k-sized output: eager checkpoint, then release the postings/
-    // stats pins (Partitioning.releasePinsAfter has the contract)
-    graft.operators.Partitioning.releasePinsAfter(
-      rankTopK(scores(post, stats, qt.union(expTerms)), k), post, stats)
+    // top-k-sized output: eager checkpoint before the postings/stats
+    // pins drop (Partitioning.pinned has the release rule)
+    rankTopK(scores(post, stats, qt.union(expTerms)), k).localCheckpoint(true)
   }
 }

@@ -2,6 +2,7 @@ package graft.operators.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Partitioning.pinned
 
 /** Iterative BPE merge training (Sennrich et al. 2016) — the actual
   * tokenizer-training loop, not just its first-round statistic
@@ -56,15 +57,14 @@ object BpeTrainer {
   private def seqOf(word: org.apache.spark.sql.Column) =
     concat(lit(" "), array_join(regexp_extract_all(word, lit("(?s)."), lit(0)), "  "), lit(" "))
 
-  def train(docs: DataFrame, textCol: String, merges: Int): DataFrame = {
+  def train(docs: DataFrame, textCol: String, merges: Int): DataFrame = pinned { pins =>
     val spark = docs.sparkSession
     import spark.implicits._
-    var vocab = graft.operators.Partitioning.ensureMinParallelism(
+    var vocab = pins.once(graft.operators.Partitioning.ensureMinParallelism(
       docs.filter(col(textCol).isNotNull))
       .select(explode(TextAnalysis.tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .select(seqOf(col("w")).as("seq"), col("cnt"))
-      .cache()
+      .select(seqOf(col("w")).as("seq"), col("cnt")))
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
     var step = 1
     var exhausted = false
@@ -87,17 +87,14 @@ object BpeTrainer {
         case None => exhausted = true // every word is one symbol already
         case Some((l, r, c)) =>
           out += ((step, l, r, l + r, c))
-          val merged = vocab
-            .withColumn("seq", replace(col("seq"),
-              lit(s" $l  $r "), lit(s" $l$r ")))
-            .cache()
-          merged.count() // materialize before dropping the parent
-          vocab.unpersist()
+          // materialized before the parent round drops
+          val merged = pins.once(vocab.withColumn("seq", replace(col("seq"),
+            lit(s" $l  $r "), lit(s" $l$r "))))
+          pins.release(vocab)
           vocab = merged
           step += 1
       }
     }
-    vocab.unpersist()
     // lhs/rhs, not left/right: reserved words in ANSI engines
     out.toSeq.toDF("step", "lhs", "rhs", "merged", "pair_count")
   }

@@ -2,6 +2,7 @@ package graft.operators.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Partitioning.pinned
 import org.apache.spark.sql.types.DecimalType
 
 /** Text analysis for training-data pipelines (beyond-parity, SURVEY.md
@@ -10,6 +11,8 @@ import org.apache.spark.sql.types.DecimalType
   * shuffle-free, so it composes with any scan at full scan speed.
   * Formulas are kept ANSI-SQL-expressible so DuckDB oracles reproduce
   * them bit-for-bit.
+  * Its `graft_*` functions resolve through `call_function`: the session
+  * needs [[graft.plans.GraftExtensions]], which [[graft.GraftSession.build]] adds.
   */
 object TextAnalysis {
 
@@ -238,12 +241,11 @@ object TextAnalysis {
     * broadcast comfort. V joins in as a broadcast single row.
     */
   def lmCrossEntropy(docs: DataFrame, ref: DataFrame,
-                     idCol: String, textCol: String): DataFrame = {
+                     idCol: String, textCol: String): DataFrame = pinned { pins =>
     // materialized once: the vocab, bigram, and history aggregates all
     // consume the reference tokenization, and Catalyst shares no
-    // subtrees — the ref slice tokenized three times per call (§5);
-    // released via releasePinsAfter below
-    val refToks = graft.operators.Partitioning.materializeOnce(
+    // subtrees — the ref slice tokenized three times per call (§5)
+    val refToks = pins.once(
       graft.operators.Partitioning.ensureMinParallelism(
         ref.filter(col(textCol).isNotNull)).select(tokens(col(textCol)).as("toks")))
     val vocab = refToks.select(explode(col("toks")).as("w"))
@@ -268,8 +270,8 @@ object TextAnalysis {
       .agg(sum(col("cnt")).as("n_bigrams"),
            sum(col("cnt") * col("nll_micros")).as("nll_sum_micros"))
       .withColumn("avg_nll_micros", expr("nll_sum_micros div n_bigrams"))
-    // per-doc-sized output: eager checkpoint, then drop the ref pin
-    graft.operators.Partitioning.releasePinsAfter(out, refToks)
+    // per-doc-sized output: eager checkpoint before the ref pin drops
+    out.localCheckpoint(true)
   }
 
   /** The remaining Gopher repetition signals (Rae et al. 2021 A1.1,

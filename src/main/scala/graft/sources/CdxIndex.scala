@@ -1576,33 +1576,24 @@ object CdxIndex {
     if (rest1.isEmpty) (r1, wave1, Nil)
     else {
       import spark.implicits._
-      // δ-feedback over the wave-1 result. The decision collect below
-      // computes the resolve once; the cache is DROPPED again before
-      // returning (blocking = false), so the caller's action recomputes
-      // the pruned resolve instead of this call leaking one cached
-      // request-sized result per TimeGate batch into executor storage —
-      // with per-key seeding, "rest non-empty, nothing needed" is the
-      // COMMON production shape, and ContextCleaner-freed pins would
-      // accumulate for as long as the driver skips a GC.
-      val r1p = r1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val bdf = rest1.map { case (p, klo, khi, tsLo, tsHi, _) =>
-          (p, klo, khi, tsLo.get, tsHi.get)
-        }.toDF("__path", "__klo", "__khi", "__tlo", "__thi")
-        val w = ts14Epoch(col("want_ts"))
-        val delta = when(col("ts").isNotNull, abs(ts14Epoch(col("ts")) - w))
-        val mindist = when(w.between(col("__tlo"), col("__thi")), lit(0L))
-          .otherwise(least(abs(w - col("__tlo")), abs(w - col("__thi"))))
-        val needed = r1p.join(broadcast(bdf),
-            col("surt") >= col("__klo") && col("surt") <= col("__khi") &&
-              (delta.isNull || mindist <= delta))
-          .select(col("__path")).distinct()
-          .collect().map(_.getString(0)).toSeq.sorted
-        if (needed.isEmpty) (r1, wave1, Nil)
-        else
-          (resolveNearest(pinned, scanPruned((wave1 ++ needed).sorted)),
-            wave1, needed)
-      } finally { r1p.unpersist(false); () }
+      // δ-feedback over the wave-1 result: one decision collect reads it,
+      // so nothing is pinned; the caller's action runs the returned resolve
+      val bdf = rest1.map { case (p, klo, khi, tsLo, tsHi, _) =>
+        (p, klo, khi, tsLo.get, tsHi.get)
+      }.toDF("__path", "__klo", "__khi", "__tlo", "__thi")
+      val w = ts14Epoch(col("want_ts"))
+      val delta = when(col("ts").isNotNull, abs(ts14Epoch(col("ts")) - w))
+      val mindist = when(w.between(col("__tlo"), col("__thi")), lit(0L))
+        .otherwise(least(abs(w - col("__tlo")), abs(w - col("__thi"))))
+      val needed = r1.join(broadcast(bdf),
+          col("surt") >= col("__klo") && col("surt") <= col("__khi") &&
+            (delta.isNull || mindist <= delta))
+        .select(col("__path")).distinct()
+        .collect().map(_.getString(0)).toSeq.sorted
+      if (needed.isEmpty) (r1, wave1, Nil)
+      else
+        (resolveNearest(pinned, scanPruned((wave1 ++ needed).sorted)),
+          wave1, needed)
     }
   }
 

@@ -954,7 +954,7 @@ object WarcIo {
       digestDir: Option[String] = None,
       maxGens: Option[Int] = None,
       tagHorizon: Option[Int] = None): (DataFrame, Long) => Unit =
-    (records: DataFrame, epochId: Long) => {
+    (records: DataFrame, epochId: Long) => graft.operators.Partitioning.pinned { pins =>
       val t0 = System.nanoTime()
       val sub = s"epoch-$epochId"
       val spark = records.sparkSession
@@ -969,8 +969,9 @@ object WarcIo {
         writeWarcWithCdx(records, s"$collectionRoot/$sub", s"$sub/")
       // materialized once: the same parsed rows feed both masters (the
       // lookupBatch discipline — re-parsing the gzip/JSON sidecars per
-      // append would double the hot path's ingest work)
-      val cdx = readCdxjCommitted(spark, s"$collectionRoot/$sub").localCheckpoint()
+      // append would double the hot path's ingest work); released with
+      // the epoch, not left to a JVM GC
+      val cdx = pins.checkpoint(readCdxjCommitted(spark, s"$collectionRoot/$sub"))
       val appended = CdxIndex.appendEpoch(cdx, masterDir, nShards, sub)
       digestDir.foreach(d =>
         CdxIndex.appendEpoch(cdx, d, nShards, sub, CdxIndex.DigestKey))
@@ -1821,11 +1822,11 @@ object WarcIo {
     // without materialization the request resolution upstream of
     // `resolved`, the index derivation AND the ranged fetch itself
     // re-execute once per consumer. Both tables are REQUEST-sized, so
-    // the eager localCheckpoint contract applies (truncated lineage is
-    // acceptable for output-bound tables — Partitioning.releasePinsAfter
-    // scaladoc): one job each, blocks reaped by the ContextCleaner when
-    // the frames are collected, no unpersist protocol leaking pins
-    // across calls.
+    // an eager output localCheckpoint applies (truncated lineage is
+    // acceptable for output-bound tables; the returned plan reads both,
+    // so they stay outside a pin scope — Partitioning.pinned's release
+    // rule): one job each, blocks reaped by the ContextCleaner when the
+    // frames are collected.
     val fetched = fetchByCdx(resolved, dir, maxPayloadBytes)
       .withColumn("src_filename", col("filename"))
       .withColumn("src_offset", col("offset"))

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Partitioning.pinned
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.model._
 
@@ -102,10 +103,10 @@ object CdcPipeline {
       batch.columns.contains("op") && !batch.filter(col("op") === Op.Ddl).isEmpty
     if (!hasDdl) { sink.applyBatch(batch, epochId); return }
     // Each DDL boundary issues segment filter + isEmpty probes; without a
-    // persist every one re-executes the batch's source plan (re-reads are
+    // pin every one re-executes the batch's source plan (re-reads are
     // only accidentally cheap because the test source is immutable files).
-    val cached = batch.persist()
-    try {
+    pinned { pins =>
+      val cached = pins.once(batch)
       val handler = ddlHandler.get
       val ddls = cached.filter(col("op") === Op.Ddl)
         .select(col("db"), col("table"), col("after"), col("seq"))
@@ -122,7 +123,7 @@ object CdcPipeline {
       }
       val tail = dml.filter(col("seq") > lo)
       if (!tail.isEmpty) sink.applyBatch(tail, epochId)
-    } finally cached.unpersist()
+    }
   }
 }
 
@@ -181,14 +182,14 @@ class ParquetUpsertSink(spark: SparkSession, tableDir: String, ledgerDir: String
           .unionByName(incoming, allowMissingColumns = true)
       case None => incoming
     }
-    val mergedOut = merged.join(deletedKeys, Seq(keyCol), "left_anti").cache()
-    mergedOut.count()
-    mergedOut.write.mode(SaveMode.Overwrite).parquet(tableDir + ".tmp")
+    // staged through .tmp: the merge reads tableDir, so it cannot
+    // overwrite tableDir directly
+    merged.join(deletedKeys, Seq(keyCol), "left_anti")
+      .write.mode(SaveMode.Overwrite).parquet(tableDir + ".tmp")
     spark.read.parquet(tableDir + ".tmp").write.mode(SaveMode.Overwrite).parquet(tableDir)
     val gtids = fresh.select("gtid").distinct()
       .withColumn("epoch_id", lit(epochId))
     gtids.write.mode(SaveMode.Append).parquet(ledgerDir)
-    mergedOut.unpersist()
   }
 
   private def readOrEmpty(dir: String): Option[DataFrame] =

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Partitioning.pinned
 import graft.operators.dedup.Dedup
 
 /** Streaming exact dedup for continuously-ingested corpora (beyond-
@@ -75,28 +76,26 @@ object StreamingDedup {
                     threshold: Double = 0.5, maxBucket: Int = 500)(
                     accept: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
     import graft.operators.dedup.MinHashDedup
-    (batch: DataFrame, epochId: Long) => {
+    (batch: DataFrame, epochId: Long) => pinned { pins =>
       val spark = batch.sparkSession
       val (bandsPath, sigsPath) = (s"$indexDir/bands", s"$indexDir/sigs")
-      // persist the micro-batch FIRST: the probe anti-join is a
+      // pin the micro-batch FIRST: the probe anti-join is a
       // self-join of the foreachBatch frame with its own derived
-      // aggregate, and an unpersisted streaming batch self-join
+      // aggregate, and an unpinned streaming batch self-join
       // mis-resolves (every row matched its own dup row and dropped) —
-      // the cache gives both sides one stable relation
-      val cached = batch.persist()
-      try {
-        val fresh = if (new java.io.File(bandsPath).exists()) {
-          val dups = MinHashDedup.nearDupAgainstIndex(
-              spark.read.parquet(bandsPath), spark.read.parquet(sigsPath),
-              cached, idCol, textCol, n, k, numBands, threshold, maxBucket)
-            .select(col("doc_id").as(idCol)).distinct()
-          cached.join(dups, Seq(idCol), "left_anti")
-        } else cached
-        val (bands, sigs) = MinHashDedup.buildPortableIndex(fresh, idCol, textCol, n, k, numBands)
-        bands.write.mode("append").parquet(bandsPath)
-        sigs.write.mode("append").parquet(sigsPath)
-        accept(fresh, epochId)
-      } finally cached.unpersist()
+      // the pin gives both sides one stable relation
+      val cached = pins.once(batch)
+      val fresh = if (new java.io.File(bandsPath).exists()) {
+        val dups = MinHashDedup.nearDupAgainstIndex(
+            spark.read.parquet(bandsPath), spark.read.parquet(sigsPath),
+            cached, idCol, textCol, n, k, numBands, threshold, maxBucket)
+          .select(col("doc_id").as(idCol)).distinct()
+        cached.join(dups, Seq(idCol), "left_anti")
+      } else cached
+      val (bands, sigs) = MinHashDedup.buildPortableIndex(fresh, idCol, textCol, n, k, numBands)
+      bands.write.mode("append").parquet(bandsPath)
+      sigs.write.mode("append").parquet(sigsPath)
+      accept(fresh, epochId)
     }
   }
 }

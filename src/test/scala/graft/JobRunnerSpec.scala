@@ -226,19 +226,38 @@ class JobRunnerSpec extends SparkSpec {
     assert(plan.snapshotChunks == 20)            // ceil(10000 / 500)
     assert(plan.triggerMs == 250L)
     assert(plan.sinkPartitions == 8)
-    assert(plan.maxSeqsPerTrigger == 64L * 4)
     assert(plan.bulkTiers == Seq(256, 64, 16, 1))
     assert(plan.sessionSetup == Seq("SET FOREIGN_KEY_CHECKS = 0"))
     assert(plan.snapshotOnly && plan.dropTargetFirst && plan.createTargetTables)
     // defaults reproduce the reference's envelope (BASELINE.md §1)
     val dflt = JobRunner.runtimePlan(JobConfig.fromJson("{}"), tableRows = 10_000L)
     assert(dflt.snapshotChunks == 5 && dflt.triggerMs == 100L &&
-      dflt.sinkPartitions == 1 && dflt.maxSeqsPerTrigger == 32L &&
+      dflt.sinkPartitions == 1 &&
       dflt.bulkTiers == Seq(128, 8, 4, 1) && dflt.sessionSetup.isEmpty)
     // a Kafka destination's trigger comes from ITS grouping timeout
     val kafkaCfg = JobConfig.fromJson(
       """{"KafkaConfig": {"Topic": "t", "Brokers": ["b:9092"], "MessageGroupTimeout": 400}}""")
     assert(JobRunner.runtimePlan(kafkaCfg, 1000L).triggerMs == 400L)
+  }
+
+  test("a fromJson runner's incremental queries run the job's trigger") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.ProcessingTimeTrigger
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+    // the default job's GroupTimeout is 100 ms (BASELINE.md §1)
+    val (runner, _) = JobRunner.fromJson(spark, """{"ReplicateDoDb": [{"TableSchema": "db"}]}""")
+    val sink = new graft.streaming.UpsertSink {
+      override def applyBatch(batch: org.apache.spark.sql.DataFrame, epochId: Long): Unit = ()
+    }
+    val dir = TempDirs.scratch("job-trigger")
+    val queries = Seq(
+      runner.incremental(MemoryStream[ChangeEvent].toDF(), sink, s"$dir/cp1"),
+      runner.incrementalWithDdl(MemoryStream[WireEvent].toDF(), sink, s"$dir/cp2",
+        new graft.ddl.SchemaRegistry, _ => ()))
+    try queries.foreach { q =>
+      assert(q.asInstanceOf[StreamingQueryWrapper].streamingQuery.trigger ==
+        ProcessingTimeTrigger(100L))
+    } finally queries.foreach(_.stop())
   }
 
   test("replayBatch: routed change log over snapshot state gives final state") {

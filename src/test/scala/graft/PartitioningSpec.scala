@@ -54,15 +54,61 @@ class PartitioningSpec extends SparkSpec {
     }
   }
 
-  test("releasePinsAfter releases its pins when the output checkpoint throws") {
+  private def persistentIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def checkpointRddId(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.logical.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+
+  test("pinned releases once and checkpoint pins on success and on a throw") {
     val cm = spark.sharedState.cacheManager
     cm.clearCache()
-    val pin = Partitioning.materializeOnce(spark.range(100).toDF("id"))
-    assert(!cm.isEmpty, "materializeOnce must register its pin")
-    val failing = pin.select(
-      when(col("id") === 7L, raise_error(lit("checkpoint failure"))).otherwise(col("id")).as("id"))
-    val e = intercept[Exception] { Partitioning.releasePinsAfter(failing, pin) }
-    assert(String.valueOf(e.getMessage).contains("checkpoint failure"), e.getMessage)
-    assert(cm.isEmpty, "a failed checkpoint must not leave its pins cached")
+    val before = persistentIds
+    def body(fail: Boolean)(pins: Partitioning.Pins): Long = {
+      val a = pins.once(spark.range(100).toDF("id"))
+      val b = pins.checkpoint(a.filter(col("id") % 2 === 0))
+      assert(!cm.isEmpty, "once must register its pin")
+      assert((persistentIds -- before).size == 2, "both pins must hold blocks inside the scope")
+      if (fail) b.select(raise_error(lit("body failure"))).collect()
+      b.count()
+    }
+    assert(Partitioning.pinned(body(fail = false)) == 50L)
+    assert(cm.isEmpty, "a finished scope must not leave its once pin cached")
+    assert(persistentIds -- before == Set.empty, "a finished scope must drop its checkpoint")
+    val e = intercept[Exception] { Partitioning.pinned(body(fail = true)) }
+    assert(String.valueOf(e.getMessage).contains("body failure"), e.getMessage)
+    assert(cm.isEmpty, "a failed scope must not leave its once pin cached")
+    assert(persistentIds -- before == Set.empty, "a failed scope must drop its checkpoint")
+  }
+
+  test("pins.release drops a pin now; pins.keep hands a checkpoint out") {
+    val cm = spark.sharedState.cacheManager
+    cm.clearCache()
+    val before = persistentIds
+    val out = Partitioning.pinned { pins =>
+      val a = pins.once(spark.range(10).toDF("id"))
+      val b = pins.checkpoint(a.select((col("id") * 2).as("id")))
+      pins.release(a)
+      assert(cm.isEmpty, "release must unpersist a once pin now")
+      pins.keep(b)
+    }
+    assert(persistentIds -- before == Set(checkpointRddId(out)))
+    assert(out.agg(sum("id")).head().getLong(0) == 90L, "a kept checkpoint stays readable")
+  }
+
+  test("pageRank and connectedComponents keep only their output checkpoint") {
+    import spark.implicits._
+    val edges = Seq("a" -> "b", "b" -> "c", "c" -> "a", "c" -> "d", "e" -> "a").toDF("src", "dst")
+    val before = persistentIds
+    val ranks = graft.operators.LinkGraph.pageRank(edges, "src", "dst", iterations = 3)
+    assert(persistentIds -- before == Set(checkpointRddId(ranks)),
+      "pageRank must release its edge, degree, node and superseded round checkpoints")
+    assert(ranks.count() == 5L)
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (7L, 8L)).toDF("id_a", "id_b")
+    val before2 = persistentIds
+    val labels = graft.operators.dedup.Dedup.connectedComponents(pairs)
+    assert(persistentIds -- before2 == Set(checkpointRddId(labels)),
+      "connectedComponents must release its edge pins and superseded label rounds")
+    assert(labels.as[(Long, Long)].collect().toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 7L -> 7L, 8L -> 7L))
   }
 }

@@ -13,7 +13,7 @@ class PlanQualitySpec extends SparkSpec {
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
   /** The plan that actually ran inside an eager operator. Operators that
-    * end in `Partitioning.releasePinsAfter` return a checkpoint scan, so
+    * end in an output `localCheckpoint` return a checkpoint scan, so
     * the returned frame hides the join/aggregate shape; a registered
     * listener sees the `localCheckpoint` execution itself. Listener
     * callbacks arrive in order, so a marker query run afterwards bounds

@@ -48,6 +48,25 @@ class TrainingDataPipelineSpec extends SparkSpec {
     assert(spark.read.parquet(outDir).count() == viaWrite.count())
   }
 
+  test("curateTo: a failed write releases the working-set pin") {
+    import spark.implicits._
+    val docs = Seq(
+      (1L, "The quick brown fox jumps over the lazy dog and it is fine. " * 5),
+      (2L, "The quick brown fox jumps over the lazy dog and it is fine. " * 5),
+      (3L, "Der Hund ist nicht zu Hause und das ist auch gut so heute. " * 5)
+    ).toDF("doc_id", "text")
+    // an output path below a regular file cannot be created
+    val blocker = new java.io.File(TempDirs.scratch("curate_to_fail_"), "not_a_dir")
+    java.nio.file.Files.write(blocker.toPath, Array[Byte](1))
+    spark.sharedState.cacheManager.clearCache()
+    intercept[Exception] {
+      TrainingDataPipeline.curateTo(docs, "doc_id", "text", s"${blocker.getPath}/corpus",
+        minQuality = 0.5, jaccardThreshold = 0.5)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a failed curateTo write leaked its working-set pin into the session cache")
+  }
+
   test("ingest: gate, dedup vs index, split — fresh quality docs enter with a split") {
     import spark.implicits._
     val index = Seq(

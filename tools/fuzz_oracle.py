@@ -88,6 +88,9 @@ QUERIES = [
     "cdx_nearest_at", "cdx_timemap", "cdx_epoch_metrics",
     "cdx_resume_page", "cdx_lookup_timebound", "cdx_collapse",
     "cdx_latest", "cdx_domain_timebound",
+    # simhash fingerprints: NULL-text docs must pair with nobody on
+    # either side (program and oracle)
+    "dedup_simhash", "dedup_simhash_incremental",
 ]
 
 # events-only queries: gated when the adversarial events table is
