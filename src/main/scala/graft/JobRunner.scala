@@ -36,6 +36,8 @@ object JobRunner {
   /** The reference's tuning knobs mapped onto this engine's runtime
     * parameters (the BASELINE.md §1 defaults table): how a dtle user's
     * numbers tune the Spark job rather than being parsed and ignored.
+    * `ReplChanBufferSize` is accepted and has no effect: it sizes a Go
+    * channel of dtle's, and a micro-batch has no such queue.
     */
   final case class RuntimePlan(
       snapshotChunks: Int,        // ChunkSize → keyset chunk count

@@ -26,7 +26,6 @@ case class TuningConfig(
     groupMaxSize: Int = 1,             // DefaultSrcGroupMaxSize
     groupTimeoutMs: Int = 100,         // DefaultSrcGroupTimeout
     parallelWorkers: Int = 1,          // DefaultNumWorkers
-    replChanBufferSize: Long = 32,     // DefaultChannelBufferSize
     dropTableIfExists: Boolean = false,
     skipCreateDbTable: Boolean = false,
     skipIncrementalCopy: Boolean = false,
@@ -127,7 +126,6 @@ object JobConfig {
       groupMaxSize = intOr("GroupMaxSize", 1),
       groupTimeoutMs = intOr("GroupTimeout", 100),
       parallelWorkers = intOr("ParallelWorkers", 1),
-      replChanBufferSize = longOr("ReplChanBufferSize", 32L),
       dropTableIfExists = boolOr("DropTableIfExists", dflt = false),
       skipCreateDbTable = boolOr("SkipCreateDbTable", dflt = false),
       skipIncrementalCopy = boolOr("SkipIncrementalCopy", dflt = false),

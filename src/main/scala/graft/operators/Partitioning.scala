@@ -36,7 +36,9 @@ object Partitioning {
     try body(pins) finally pins.releaseAll()
   }
 
-  final class Pins private[Partitioning] {
+  /** The pins of one scope; operator code that holds pins across calls
+    * makes its own and calls [[releaseAll]] when it drops them. */
+  final class Pins private[operators] {
     private val held = scala.collection.mutable.ArrayBuffer.empty[(DataFrame, () => Unit)]
 
     /** Persist MEMORY_AND_DISK + an eager count, so a derived table with
@@ -84,7 +86,7 @@ object Partitioning {
       df
     }
 
-    private[Partitioning] def releaseAll(): Unit = {
+    private[operators] def releaseAll(): Unit = {
       held.reverseIterator.foreach(_._2())
       held.clear()
     }

@@ -3,7 +3,7 @@ package graft.operators.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.Partitioning.pinned
+import graft.operators.Partitioning.{Pins, pinned}
 
 /** Okapi BM25 full-text retrieval over the corpus (beyond-parity,
   * SURVEY.md §8) — the lexical half of every RAG / data-curation
@@ -385,28 +385,32 @@ object Bm25 {
     * inside one batch ([[openIndex]]'s freeze point, through the
     * stream). The broadcast sides (term dfs, the stats row) are
     * re-derived once per VERSION, not per batch: they are eagerly
-    * localCheckpointed (vocab-sized — ContextCleaner reaps the blocks
-    * when a swap drops the old version's entry, so a long-running
-    * stream pins at most one version's sides).
+    * localCheckpointed (vocab-sized) under one [[graft.operators.Partitioning.Pins]]
+    * per version, released when a swap replaces it, so a long-running
+    * stream pins at most one version's sides.
     *
     * `sink(matches, batchId, version)` receives each batch's
     * percolation with the version it scored under — alert consumers
-    * log it so a score step at a swap is attributable.
+    * log it so a score step at a swap is attributable. `matches` reads
+    * the version's sides, so a sink consumes it before returning.
     */
   def percolateStreamVersioned(dir: String, queries: DataFrame,
       qidCol: String, qtextCol: String,
       stream: DataFrame, idCol: String, textCol: String)
       (sink: (DataFrame, Long, String) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = queries.sparkSession
-    var held: (String, DataFrame, DataFrame) = null
+    var held: (String, Pins, DataFrame, DataFrame) = null
     stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val v = currentIndexVersion(dir).getOrElse(
         throw new IllegalStateException(s"no _CURRENT index under $dir"))
       if (held == null || held._1 != v) {
         val (post, st) = openIndex(spark, dir)
-        held = (v, termDf(post).localCheckpoint(true), st.localCheckpoint(true))
+        val pins = new Pins
+        val next = (v, pins, pins.checkpoint(termDf(post)), pins.checkpoint(st))
+        if (held != null) held._2.releaseAll()
+        held = next
       }
-      sink(percolate(held._2, held._3, queries, qidCol, qtextCol,
+      sink(percolate(held._3, held._4, queries, qidCol, qtextCol,
         batch, idCol, textCol), batchId, v)
       ()
     }.start()

@@ -14,15 +14,15 @@ import graft.streaming.UpsertSink
   *      equivalent of the reference's writeset/logical-clock safety
   *      (`applier_mts.go`; SURVEY §2.8 O4/O5). `numPartitions` plays
   *      `ParallelWorkers`.
-  *   2. each partition opens one connection, replays its rows as
-  *      REPLACE / DELETE(+REPLACE for updates) via prepared statements
+  *   2. each partition opens one connection and applies its rows' final
+  *      state ([[JdbcUpsertSink.applyRows]]) via prepared statements
   *      cached per (table, kind, tier) — the reference's per-worker
   *      statement cache (`driver/common/binlog.go:150-190`).
   *   3. the GTID ledger insert shares the partition's transaction
-  *      (reference `applier_incr.go:812-844`): idempotence survives
-  *      partial-batch failure because replayed GTIDs are filtered by the
-  *      ledger anti-join upstream (F10) and the tx makes row+marker
-  *      atomic.
+  *      (reference `applier_incr.go:812-844`): rows and ledger marker
+  *      commit atomically per partition. Nothing filters GTIDs the
+  *      ledger holds, so an epoch replayed after its target commit
+  *      re-applies the same final state and inserts its ledger rows again.
   *   4. a deadlocked/transient-failed transaction is rolled back and
   *      retried up to [[JdbcUpsertSink.RetryTxLimit]] times on a fresh
   *      connection + statement cache (reference `driver/driver.go:168-169`
@@ -50,7 +50,6 @@ class JdbcUpsertSink(
 ) extends UpsertSink {
 
   override def applyBatch(batch: DataFrame, epochId: Long): Unit = {
-    if (batch.isEmpty) return
     val conn0 = connect()
     try {
       conn0.createStatement().execute(SqlBuilder.ledgerCreate(ledgerSchema))
@@ -159,9 +158,15 @@ object JdbcUpsertSink {
     case _ => false
   }
 
-  /** One partition's worth of row application, inside the caller's open
-    * transaction: bulk REPLACE/DELETE runs + the ledger marker batch.
-    * Pure function of (rows, statements) so a retry is an exact replay.
+  /** One partition's rows, seq-sorted and non-empty, applied inside the
+    * caller's open transaction as their final state, then the ledger
+    * marker batch. Pure function of (rows, statements) so a retry is an
+    * exact replay. No reader sees inside the transaction, so a keyed
+    * table applies each primary key's last op by seq: one DELETE run,
+    * then tiered REPLACEs (`SqlBuilder.tierPlan`, reference
+    * `applier_incr.go:694-730`) in order of each key's last seq. A
+    * keyless table's `DELETE … LIMIT 1` removes one of several identical
+    * rows, so its op runs go to the same two emitters in seq order.
     */
   private[sinks] def applyRows(
       buffered: Array[Row],
@@ -172,77 +177,64 @@ object JdbcUpsertSink {
       oc: String,
       gc: String,
       tiers: Seq[Int] = SqlBuilder.bulkTiers): Unit = {
-    var appliedGtids = Set.empty[String]
-    // Bulk application (reference `applier_incr.go:694-730` +
-    // `driver.go:161-167`): buffer consecutive same-op runs and
-    // flush them as multi-row statements via SqlBuilder.tierPlan
-    // (128/8/4/1 rows per REPLACE) and addBatch/executeBatch for
-    // deletes — one network round trip per statement batch instead
-    // of one per row. Op-switch flushes the other run first, so
-    // per-key ordering (rows arrive seq-sorted) is preserved.
-    val replaceRun = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val deleteRun = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val whereCols = if (tableDef.hasPk) tableDef.pkColumns else tableDef.columns
+    // every row of a partition shares one schema: resolve fields once
+    val schema = buffered(0).schema
+    val colIdx = tableDef.columns.map(schema.fieldIndex).toArray
+    val whereIdx = (if (tableDef.hasPk) tableDef.pkColumns else tableDef.columns)
+      .map(schema.fieldIndex).toArray
+    val opIdx = schema.fieldIndex(oc)
+    val gtidIdx = schema.fieldNames.indexOf(gc)
+    def isDelete(r: Row): Boolean = r.getString(opIdx) == "d" // c/u/r → replace
 
-    def flushReplaces(): Unit = if (replaceRun.nonEmpty) {
+    def bind(st: PreparedStatement, values: Iterator[Any]): Unit = {
+      values.zipWithIndex.foreach { case (v, i) => st.setObject(i + 1, v.asInstanceOf[AnyRef]) }
+      st.addBatch()
+    }
+    def replaces(rows: Seq[Row]): Unit = {
       var off = 0
-      SqlBuilder.tierPlan(replaceRun.length, tiers).foreach { case (tier, count) =>
-        val st = cache.get(tableDef.fqn, "replace", tier,
-          SqlBuilder.replaceInto(tableDef, tier))
-        var n = 0
-        while (n < count) {
-          var i = 1
-          var k = 0
-          while (k < tier) {
-            val r = replaceRun(off + k)
-            tableDef.columns.foreach { c => st.setObject(i, r.getAs[AnyRef](c)); i += 1 }
-            k += 1
-          }
-          st.addBatch()
-          off += tier
-          n += 1
-        }
+      SqlBuilder.tierPlan(rows.length, tiers).foreach { case (tier, count) =>
+        val st = cache.get(tableDef.fqn, "replace", tier, SqlBuilder.replaceInto(tableDef, tier))
+        rows.slice(off, off + tier * count).grouped(tier)
+          .foreach(stmt => bind(st, stmt.iterator.flatMap(r => colIdx.iterator.map(r.get))))
+        off += tier * count
         st.executeBatch()
       }
-      replaceRun.clear()
     }
-
-    def flushDeletes(): Unit = if (deleteRun.nonEmpty) {
+    def deletes(rows: Seq[Row]): Unit = {
       val st = cache.get(tableDef.fqn, "delete", 1, SqlBuilder.delete(tableDef))
-      deleteRun.foreach { r =>
-        var i = 1
-        whereCols.foreach { c =>
-          val v = r.getAs[AnyRef](c)
-          st.setObject(i, v); st.setObject(i + 1, v); i += 2
-        }
-        st.addBatch()
-      }
+      // the null-safe WHERE binds each value twice
+      rows.foreach(r => bind(st, whereIdx.iterator.flatMap { j => val v = r.get(j); Iterator(v, v) }))
       st.executeBatch()
-      deleteRun.clear()
+    }
+    // at most one top-tier statement's rows per executeBatch: bounds the
+    // batch a JDBC driver buffers client-side
+    def emit(rows: Seq[Row], delete: Boolean): Unit =
+      rows.grouped(tiers.head).foreach(if (delete) deletes else replaces)
+
+    if (tableDef.hasPk) {
+      val keys = buffered.map(r => whereIdx.toSeq.map(r.get))
+      val lastAt = keys.zipWithIndex.toMap // a repeated key keeps its last index
+      val (dels, reps) = buffered.indices.filter(i => lastAt(keys(i)) == i)
+        .map(buffered).partition(isDelete)
+      emit(dels, delete = true)
+      emit(reps, delete = false)
+    } else {
+      var rest = buffered.toList
+      while (rest.nonEmpty) {
+        val d = isDelete(rest.head)
+        val (run, tail) = rest.span(isDelete(_) == d)
+        emit(run, d)
+        rest = tail
+      }
     }
 
-    buffered.foreach { r =>
-      r.getAs[String](oc) match {
-        case "d" =>
-          flushReplaces()
-          deleteRun += r
-          if (deleteRun.length >= SqlBuilder.bulkTiers.head) flushDeletes()
-        case _ => // c/u/r → replace
-          flushDeletes()
-          replaceRun += r
-          // at the top tier, flush eagerly: bounds the run buffer and
-          // emits exactly one full 128-row statement
-          if (replaceRun.length >= SqlBuilder.bulkTiers.head) flushReplaces()
-      }
-      val g = if (r.schema.fieldNames.contains(gc)) r.getAs[String](gc) else null
-      if (g != null) appliedGtids += g
-    }
-    flushReplaces()
-    flushDeletes()
-    // ledger rows in the same tx (exactly-once: row+marker atomic)
-    if (appliedGtids.nonEmpty) {
+    // ledger rows in the same tx (rows + marker commit atomically), in
+    // seq order so each source's GNOs arrive ascending
+    val gtids = if (gtidIdx < 0) Nil
+      else buffered.iterator.map(_.getString(gtidIdx)).filter(_ != null).distinct.toList
+    if (gtids.nonEmpty) {
       val st = cache.get(lSchema, "ledger", 1, SqlBuilder.ledgerInsert(lSchema))
-      appliedGtids.foreach { g =>
+      gtids.foreach { g =>
         val (sid, gno) = parseGtid(g)
         st.setString(1, job); st.setString(2, sid)
         st.setLong(3, gno); st.setString(4, g)

@@ -28,27 +28,18 @@ import graft.functions.IntervalSet
 object LedgerCompactor {
 
   /** Fold per-tx GNOs and previously-compacted interval strings into one
-    * canonical interval-set string per source UUID. Pure — the JDBC
+    * canonical interval-set string per source UUID: one sort and one
+    * coalescing pass over all points and prior intervals. Pure — the JDBC
     * routine and specs share it.
     */
   def foldRows(rows: Seq[(String, Long, String)]): Map[String, String] =
     rows.groupBy(_._1).map { case (sid, rs) =>
-      val fromGnos = rs.collect { case (_, gno, _) if gno != 0L => gno }
-        .foldLeft(IntervalSet(Nil))(_.add(_))
-      val merged = rs.collect { case (_, 0L, set) if set != null && set.nonEmpty => set }
-        .foldLeft(fromGnos)((acc, s) => acc.merge(parse(s)))
-      sid -> merged.render
-    }
-
-  /** Parse a canonical "1-5:7:9-12" rendering back to an interval set. */
-  def parse(s: String): IntervalSet =
-    IntervalSet(s.split(':').toList.filter(_.nonEmpty).map { part =>
-      part.split('-') match {
-        case Array(lo)     => (lo.toLong, lo.toLong)
-        case Array(lo, hi) => (lo.toLong, hi.toLong)
-        case _ => throw new IllegalArgumentException(s"bad interval: $part")
+      val intervals = rs.flatMap {
+        case (_, 0L, set) => IntervalSet.parse(set).intervals
+        case (_, gno, _)  => List((gno, gno))
       }
-    })
+      sid -> IntervalSet.empty.merge(IntervalSet(intervals.toList)).render
+    }
 
   /** Run compaction for one job if any source UUID exceeds `threshold`
     * per-tx rows. Returns the number of source UUIDs compacted. Row

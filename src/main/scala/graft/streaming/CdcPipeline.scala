@@ -132,20 +132,23 @@ object CdcPipeline {
   */
 case class DdlBarrierEvent(db: String, table: String, sql: String, seq: Long)
 
-/** Idempotent upsert sink — the Spark-native form of the reference's
-  * applier (SURVEY.md §2.2 K2-K4, K7; §2.8 O4/O5).
+/** Upsert sink — the Spark-native form of the reference's applier
+  * (SURVEY.md §2.2 K2-K4, K7; §2.8 O4/O5).
   *
   * Within each micro-batch:
-  *   1. drop transactions already in the ledger (F10 idempotence);
-  *   2. repartition by row key and sort by seq within partitions — rows
+  *   1. repartition by row key and sort by seq within partitions — rows
   *      of the same key land in the same task in commit order, which is
   *      exactly the conflict-safety the reference's writeset/logical-
   *      clock machinery (`applier_mts.go`) establishes, with no
   *      history-map state;
-  *   3. reduce to final-state-per-key (replace/delete/update collapse);
-  *   4. apply via the pluggable writer (JDBC upsert on a real cluster;
-  *      parquet-backed table in tests) and append the ledger in the same
-  *      unit of work.
+  *   2. reduce to the final state per key: each key's last op by seq
+  *      (replace/delete/update collapse);
+  *   3. apply that state via the pluggable writer (JDBC upsert on a real
+  *      cluster; parquet-backed table in tests) and append the ledger in
+  *      the same unit of work, so rows and ledger marker commit together.
+  *
+  * Only [[ParquetUpsertSink]] anti-joins its ledger first; the JDBC sink
+  * re-applies a replayed epoch and writes its ledger rows again.
   */
 trait UpsertSink extends Serializable {
   def applyBatch(batch: DataFrame, epochId: Long): Unit

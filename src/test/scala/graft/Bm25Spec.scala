@@ -302,4 +302,33 @@ class Bm25Spec extends SparkSpec {
         s"stream must equal batch percolation on each side of the swap: $got")
     } finally q.stop()
   }
+
+  test("streaming percolator releases a replaced version's checkpointed sides") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    def persistentIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val dir = TempDirs.scratch("bm25_stream_release_")
+    val qs = Seq((1L, "alpha")).toDF("query_id", "qtext")
+    def publish(n: Int): Unit = Bm25.refreshIndex(
+      (0 until n).map(i => (i.toLong, s"alpha beta w$i")).toDF("doc_id", "text"), "doc_id", "text", dir)
+    publish(2)
+    val before = persistentIds
+    val input = MemoryStream[(Long, String)]
+    val q = Bm25.percolateStreamVersioned(dir, qs, "query_id", "qtext",
+      input.toDF().toDF("doc_id", "text"), "doc_id", "text") { (m, _, _) => m.collect(); () }
+    try {
+      input.addData((100L, "alpha"))
+      q.processAllAvailable()
+      val first = persistentIds -- before
+      assert(first.size == 2, "one version holds its term and stats sides")
+      Seq(3, 4).foreach { n =>
+        publish(n)
+        input.addData((100L + n, "alpha"))
+        q.processAllAvailable()
+      }
+      val held = persistentIds -- before
+      assert(held.size == 2 && (held & first).isEmpty,
+        s"after two swaps only the current version's sides stay: $held (first $first)")
+    } finally q.stop()
+  }
 }

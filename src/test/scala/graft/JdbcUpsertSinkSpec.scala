@@ -124,6 +124,90 @@ object RetryState {
   }
 }
 
+/** A stateful in-JVM target for the final-state tests. At commit a
+  * REPLACE overwrites its key (appends, on a keyless table), a DELETE …
+  * LIMIT 1 removes the first null-safe match on its where columns, and a
+  * ledger insert appends its GTID; a rollback drops the attempt's
+  * writes. Each connection logs its executed statements with their bound
+  * parameters, so a retried transaction can be compared statement for
+  * statement. Static, like [[JdbcRecorder]], so executor-side closure
+  * copies share it in local mode.
+  */
+object StateTarget {
+  import scala.collection.mutable.ArrayBuffer
+  /** One executeBatch: its SQL and the parameter rows it bound. */
+  type Exec = (String, Seq[Seq[AnyRef]])
+  @volatile var table: SqlBuilder.TableDef = _
+  val rows = ArrayBuffer.empty[Seq[AnyRef]]
+  val ledger = ArrayBuffer.empty[String]
+  val attempts = new ConcurrentLinkedQueue[ArrayBuffer[Exec]]()
+  val failCommits = new java.util.concurrent.atomic.AtomicInteger
+
+  def reset(t: SqlBuilder.TableDef, initial: Seq[Seq[AnyRef]], commitFailures: Int = 0): Unit =
+    synchronized {
+      table = t; rows.clear(); rows ++= initial; ledger.clear(); attempts.clear()
+      failCommits.set(commitFailures)
+    }
+
+  private def write(sql: String, p: Seq[AnyRef]): Unit = {
+    val t = table
+    def matches(r: Seq[AnyRef], at: Seq[Int], vals: Seq[AnyRef]) =
+      at.zip(vals).forall { case (j, v) => r(j) == v }
+    if (sql.startsWith("REPLACE")) {
+      val pk = t.pkColumns.map(t.columns.indexOf)
+      p.grouped(t.columns.size).foreach { values =>
+        if (t.hasPk) {
+          val i = rows.indexWhere(r => matches(r, pk, pk.map(values)))
+          if (i >= 0) rows.remove(i)
+        }
+        rows += values
+      }
+    } else if (sql.startsWith("DELETE")) {
+      val where = (if (t.hasPk) t.pkColumns else t.columns).map(t.columns.indexOf)
+      val i = rows.indexWhere(r => matches(r, where, p.grouped(2).map(_.head).toSeq))
+      if (i >= 0) rows.remove(i)
+    } else if (sql.startsWith("INSERT") && sql.contains("gtid_executed")) ledger += p(3).toString
+  }
+
+  private def proxy[T](iface: Class[T])(f: PartialFunction[(String, Array[AnyRef]), AnyRef]): T =
+    Proxy.newProxyInstance(getClass.getClassLoader, Array(iface), new InvocationHandler {
+      override def invoke(p: Any, m: Method, args: Array[AnyRef]): AnyRef =
+        f.applyOrElse((m.getName, args), (_: (String, Array[AnyRef])) => m.getReturnType match {
+          case java.lang.Boolean.TYPE => java.lang.Boolean.FALSE
+          case java.lang.Integer.TYPE => Integer.valueOf(0)
+          case _ => null
+        })
+    }).asInstanceOf[T]
+
+  def connection(): Connection = {
+    val log = ArrayBuffer.empty[Exec]
+    attempts.add(log)
+    var pending = Vector.empty[(String, Seq[AnyRef])]
+    def prepared(sql: String): PreparedStatement = {
+      val params = scala.collection.mutable.TreeMap.empty[Int, AnyRef]
+      val batch = ArrayBuffer.empty[Seq[AnyRef]]
+      proxy(classOf[PreparedStatement]) {
+        case ("setObject" | "setString" | "setLong", a) =>
+          params(a(0).asInstanceOf[Integer].intValue) = a(1); null
+        case ("addBatch", _) => batch += params.values.toVector; params.clear(); null
+        case ("executeBatch", _) =>
+          log += ((sql, batch.toVector)); pending ++= batch.map(sql -> _)
+          val n = batch.size; batch.clear(); Array.fill(n)(1)
+      }
+    }
+    proxy(classOf[Connection]) {
+      case ("prepareStatement", a) => prepared(a(0).asInstanceOf[String])
+      case ("createStatement", _) => proxy(classOf[Statement])(PartialFunction.empty)
+      case ("commit", _) =>
+        if (failCommits.getAndDecrement() > 0)
+          throw new java.sql.SQLTransactionRollbackException("Deadlock found", "40001", 1213)
+        StateTarget.synchronized(pending.foreach { case (sql, p) => write(sql, p) })
+        pending = Vector.empty; null
+      case ("rollback", _) => pending = Vector.empty; null
+    }
+  }
+}
+
 class JdbcUpsertSinkSpec extends SparkSpec {
   import spark.implicits._
 
@@ -134,7 +218,7 @@ class JdbcUpsertSinkSpec extends SparkSpec {
 
   test("mixed 141-row batch applies as tierPlan-shaped multi-row statements") {
     JdbcRecorder.clear()
-    // 141 replaces, then 5 deletes, then 3 replaces — seq keeps order
+    // 141 replaces, then 5 deletes, then 3 replaces, each on its own key
     val rows =
       (1 to 141).map(i => (i.toLong, i.toLong, i.toLong, "u", s"uuid:$i")) ++
       (142 to 146).map(i => (i.toLong, i.toLong, i.toLong, "d", s"uuid:$i")) ++
@@ -150,17 +234,99 @@ class JdbcUpsertSinkSpec extends SparkSpec {
     val deletes = evs.filter(_.sql.startsWith("DELETE"))
     val ledger = evs.filter(_.sql.contains("gtid_executed"))
 
-    // 141 = 128 + 8 + 4 + 1, then the trailing 3 as three 1-row batched
-    assert(replaces.map(e => (tierOf(e.sql), e.batchSize)) ==
-      Seq((128, 1), (8, 1), (4, 1), (1, 1), (1, 3)),
+    // final state: the 5 deleted keys go out as one batch of 5, then all
+    // 144 replaced keys as one run, 144 = 128 + 8 + 8
+    assert(deletes.map(_.batchSize) == Seq(5))
+    assert(replaces.map(e => (tierOf(e.sql), e.batchSize)) == Seq((128, 1), (8, 2)),
       s"got: ${replaces.map(e => (tierOf(e.sql), e.batchSize))}")
+    assert(evs.indexWhere(_.sql.startsWith("DELETE")) < evs.indexWhere(_.sql.startsWith("REPLACE")))
     // every replace row lands exactly once
     assert(replaces.map(e => tierOf(e.sql) * e.batchSize).sum == 144)
-    // deletes batch as one executeBatch of 5, not 5 round trips
-    assert(deletes.map(_.batchSize) == Seq(5))
     // ledger insert rides the same tx as one batch of all 149 gtids
     // (the ledger CREATE DDL records separately as a plain execute)
     assert(ledger.filter(_.sql.startsWith("INSERT")).map(_.batchSize) == Seq(149))
+  }
+
+  private val sid = "3e11fa47-71ca-11e1-9e33-c80aa9429562"
+  private def snapshot(keys: Seq[Long]): Seq[Seq[AnyRef]] =
+    keys.map(k => Seq[AnyRef](java.lang.Long.valueOf(k), s"snap$k"))
+  private def committed: Map[Long, String] = StateTarget.synchronized {
+    assert(StateTarget.rows.map(_.head).distinct.size == StateTarget.rows.size, "one row per key")
+    StateTarget.rows.map(r => r.head.asInstanceOf[java.lang.Long].longValue -> r(1).toString).toMap
+  }
+  /** The snapshot with every key the batch touched replaced by
+    * `CdcBatch.applyChangeLog`'s final state (absent when deleted).
+    */
+  private def expectedState(initial: Seq[Seq[AnyRef]], rows: Seq[(Long, String, Long, String, String)]) = {
+    val finals = graft.operators.CdcBatch.applyChangeLog(
+      rows.toDF("key", "v", "seq", "op", "gtid"), "key", "seq", "op")
+      .select("key", "v").as[(Long, String)].collect().toMap
+    val touched = rows.map(_._1).toSet
+    initial.map(r => r.head.asInstanceOf[java.lang.Long].longValue -> r(1).toString).toMap
+      .filter { case (k, _) => !touched(k) } ++ finals
+  }
+
+  test("final-state apply of random c/u/d interleavings commits applyChangeLog's state, one ledger row per GTID") {
+    val rnd = new scala.util.Random(7)
+    (1 to 8).foreach { round =>
+      val initial = snapshot(1L to 3L)
+      StateTarget.reset(td, initial)
+      // fixed prefix: snapshot key 1 deleted then re-inserted, new key 9
+      // inserted then deleted; then transactions of 1-3 random ops on keys 1-5
+      val prefix = Seq((1L, "d"), (1L, "c"), (9L, "c"), (9L, "d"))
+      val ops = prefix.map(Seq(_)) ++ (1 to rnd.between(5, 40)).map(_ =>
+        (1 to rnd.between(1, 4)).map(_ => (rnd.between(1, 6).toLong, Seq("c", "u", "d")(rnd.nextInt(3)))))
+      val rows = ops.zipWithIndex.flatMap { case (tx, t) => tx.map(op => (op, t + 1)) }
+        .zipWithIndex.map { case (((k, op), t), i) => (k, s"r$round-$i", i + 1L, op, s"$sid:$t") }
+      new JdbcUpsertSink(() => StateTarget.connection(), td, "job1", "ledger",
+        numPartitions = 1, compactThreshold = 0)
+        .applyBatch(rows.toDF("key", "v", "seq", "op", "gtid"), round.toLong)
+      assert(committed == expectedState(initial, rows), s"round $round: $rows")
+      assert(StateTarget.ledger.sorted == rows.map(_._5).distinct.sorted, s"round $round")
+    }
+  }
+
+  test("a keyless table applies its seq-ordered op runs: duplicate rows keep their order") {
+    val keyless = SqlBuilder.TableDef("db", "nk", Seq("key", "v"), Nil)
+    val initial = Seq(Seq[AnyRef](java.lang.Long.valueOf(1L), "a"))
+    StateTarget.reset(keyless, initial)
+    val ops = Seq((1L, "a", "d"), (1L, "a", "c"), (1L, "a", "c"), (1L, "a", "d"),
+      (2L, "b", "c"), (2L, "b", "d"), (2L, "b", "d"), (3L, "c", "c"))
+    val rows = ops.zipWithIndex.map { case ((k, v, op), i) => (k, v, i + 1L, op, s"$sid:${i + 1}") }
+    new JdbcUpsertSink(() => StateTarget.connection(), keyless, "job1", "ledger",
+      numPartitions = 1, compactThreshold = 0)
+      .applyBatch(rows.toDF("key", "v", "seq", "op", "gtid"), 0L)
+    // one-row-at-a-time replay: a delete removes one of the identical rows
+    val replayed = ops.foldLeft(List((1L, "a"))) {
+      case (acc, (k, v, "d")) =>
+        val i = acc.indexOf((k, v)); if (i < 0) acc else acc.patch(i, Nil, 1)
+      case (acc, (k, v, _)) => acc :+ ((k, v))
+    }
+    assert(replayed.sorted == Seq((1L, "a"), (3L, "c")))
+    val got = StateTarget.rows.map(r => (r.head.asInstanceOf[java.lang.Long].longValue, r(1).toString))
+    assert(got.sorted == replayed.sorted)
+    val kinds = StateTarget.attempts.toArray(Array.empty[scala.collection.mutable.ArrayBuffer[StateTarget.Exec]])
+      .flatMap(_.map(_._1.takeWhile(_ != ' '))).filter(_ != "INSERT").toSeq
+    assert(kinds == Seq("DELETE", "REPLACE", "DELETE", "REPLACE", "DELETE", "REPLACE"))
+  }
+
+  test("a deadlock retry replays the identical statements with identical parameters") {
+    val initial = snapshot(1L to 4L)
+    StateTarget.reset(td, initial, commitFailures = 2)
+    val rnd = new scala.util.Random(3)
+    val rows = (1 to 30).map { i =>
+      (rnd.between(1, 8).toLong, s"v$i", i.toLong, Seq("c", "u", "d")(rnd.nextInt(3)), s"$sid:${(i + 1) / 2}")
+    }
+    new JdbcUpsertSink(() => StateTarget.connection(), td, "job1", "ledger",
+      numPartitions = 1, compactThreshold = 0)
+      .applyBatch(rows.toDF("key", "v", "seq", "op", "gtid"), 0L)
+    val tries = StateTarget.attempts.toArray(Array.empty[scala.collection.mutable.ArrayBuffer[StateTarget.Exec]])
+      .toSeq.filter(_.nonEmpty)
+    assert(tries.size == 3, "two deadlocks, then the commit lands")
+    assert(tries.forall(_ == tries.head), tries.mkString("\n"))
+    assert(Seq("DELETE", "REPLACE", "INSERT").forall(k => tries.head.exists(_._1.startsWith(k))))
+    assert(committed == expectedState(initial, rows))
+    assert(StateTarget.ledger.sorted == rows.map(_._5).distinct.sorted)
   }
 
   test("config-driven tiers and session setup reach the connection") {
@@ -266,7 +432,20 @@ class JdbcUpsertSinkSpec extends SparkSpec {
       ("sid-a", 0L, "7-9:100"), ("sid-a", 3L, null),
       ("sid-b", 10L, null)))
     assert(folded == Map("sid-a" -> "1-3:5:7-9:100", "sid-b" -> "10"))
-    assert(LedgerCompactor.parse("1-3:5:7-9").render == "1-3:5:7-9")
+    assert(graft.functions.IntervalSet.parse("1-3:5:7-9").render == "1-3:5:7-9")
+  }
+
+  test("foldRows over 5,000 shuffled GNOs equals the graft_gtid_set aggregate") {
+    import graft.sinks.LedgerCompactor
+    import graft.functions.{GtidSetAgg, IntervalSet}
+    val rnd = new scala.util.Random(11)
+    val gnos = rnd.shuffle(rnd.shuffle((1L to 8000L).toVector).take(5000))
+    val agg = gnos.toDF("gno").agg(GtidSetAgg.column(col("gno"))).as[String].head()
+    assert(LedgerCompactor.foldRows(gnos.map(g => (sid, g, null))) == Map(sid -> agg))
+    // a compacted interval row folds in through the same pass
+    val prior = "1-3:9000-9005"
+    assert(LedgerCompactor.foldRows((sid, 0L, prior) +: gnos.map(g => (sid, g, null)))(sid) ==
+      IntervalSet.parse(agg).merge(IntervalSet.parse(prior)).render)
   }
 
   test("compact() rewrites only sids over threshold: delete then single insert in one tx") {
