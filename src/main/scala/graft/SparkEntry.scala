@@ -37,6 +37,19 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
+  /** The one input-widening rule. Fixtures are single-row-group parquet
+    * files, so a fixture scan runs as one task; a query whose first
+    * stage is CPU-bound per row spreads it round-robin over the
+    * session's cores here. Call it on a scan with narrow operators only:
+    * then `getNumPartitions` plans without running a job. Operators take
+    * their input's partitioning as given and leave shuffles to adaptive
+    * execution.
+    */
+  private def wide(df: DataFrame): DataFrame = {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions < cores) df.repartition(cores) else df
+  }
+
   /** event_type → CDC op mapping used by all change-log queries: the
     * `events` fixture plays the binlog (`error`=delete, `signup`=insert,
     * rest=update).
@@ -123,9 +136,8 @@ object SparkEntry {
     // engine is a superset and the bench exercises them at scale) -----
 
     "q1_agg" -> ((s, dir) => {
-      // fixtures are single-row-group files (1 scan task); widen before the
-      // CPU-heavy decimal agg — no-op when the scan is already parallel
-      graft.operators.Partitioning.ensureMinParallelism(t(s, dir, "lineitem"))
+      // widen the lineitem scan before the CPU-heavy decimal agg
+      wide(t(s, dir, "lineitem"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
           sum(col("l_quantity").cast(DecimalType(18, 2))).cast("double").as("sum_qty"),
@@ -138,7 +150,7 @@ object SparkEntry {
     }),
 
     "q2_join_enrich" -> ((s, dir) => {
-      val li = graft.operators.Partitioning.ensureMinParallelism(t(s, dir, "lineitem"))
+      val li = wide(t(s, dir, "lineitem"))
       val o = t(s, dir, "orders")
       val c = t(s, dir, "customer")
       val n = t(s, dir, "nation")
@@ -158,8 +170,7 @@ object SparkEntry {
       // skew-proof fact⋈dim: content-salted lineitem against a part
       // dimension replicated per salt — result identical to the plain
       // join, but a hot partkey spreads across 8 tasks
-      val li = graft.operators.Partitioning.ensureMinParallelism(
-        t(s, dir, "lineitem"))
+      val li = wide(t(s, dir, "lineitem"))
         .select(col("l_partkey"), col("l_extendedprice"), col("l_discount"))
       val p = t(s, dir, "part").select(col("p_partkey").as("l_partkey"), col("p_brand"))
       graft.operators.Partitioning.saltedJoin(li, p, "l_partkey", nSalts = 8)
@@ -552,9 +563,8 @@ object SparkEntry {
     // ----- C: type-conversion matrix -----
 
     "c_type_matrix" -> ((s, dir) => {
-      // CPU-bound per-row projection: widen the single-row-group scan so
-      // all cores participate (same pattern as q1_agg / text_profile).
-      graft.operators.Partitioning.ensureMinParallelism(t(s, dir, "orders")).select(
+      // CPU-bound per-row projection over the widened orders scan
+      wide(t(s, dir, "orders")).select(
         col("o_orderkey"),
         TypeConversions.timeToMicros(
           concat(when(pmod(col("o_orderkey"), lit(2)) === 0, "-").otherwise(""),
@@ -1072,7 +1082,7 @@ object SparkEntry {
     "dedup_ngram" -> ((s, dir) => {
       // df cap 50: stop-shingles (shared by >50 docs) are dropped before
       // the pair join — without it a low-entropy corpus goes quadratic
-      Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text", n = 3,
+      Dedup.ngramJaccardPairs(wide(t(s, dir, "documents")), "doc_id", "text", n = 3,
           threshold = 0.5, maxShingleDf = 50)
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -1156,7 +1166,7 @@ object SparkEntry {
       // squared-constant permutations (graft_minhash_md5), so the ENTIRE
       // pipeline hash-matches the DuckDB oracle; DedupSpec pins its
       // recall and estimate error against brute-force Jaccard.
-      MinHashDedup.portablePairs(t(s, dir, "documents"), "doc_id", "text",
+      MinHashDedup.portablePairs(wide(t(s, dir, "documents")), "doc_id", "text",
           n = 3, k = 64, numBands = 16, threshold = 0.5, maxBucket = 500)
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -1596,8 +1606,8 @@ object SparkEntry {
 
     "text_profile" -> ((s, dir) => {
       // contract: null-text docs are excluded from text-derived outputs
-      TextAnalysis.profile(t(s, dir, "documents")
-          .filter(col("text").isNotNull), "doc_id", "text")
+      TextAnalysis.profile(wide(t(s, dir, "documents").filter(col("text").isNotNull)),
+          "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
 
@@ -1609,8 +1619,7 @@ object SparkEntry {
       // exchange (rank + count + pick-at-rank), so no threshold
       // re-join and no second scan of the expensive profile.
       import org.apache.spark.sql.expressions.Window
-      val q = graft.operators.Partitioning.ensureMinParallelism(
-          t(s, dir, "documents").filter(col("text").isNotNull))
+      val q = wide(t(s, dir, "documents").filter(col("text").isNotNull))
         .select(col("doc_id"), col("source"),
           round(call_function("graft_text_profile", col("text"))
             .getField("quality") * 1000000).cast("long").as("q_micros"))
@@ -1670,16 +1679,14 @@ object SparkEntry {
     "text_rolling_hash" -> ((s, dir) => {
       // md5-derived token hashes, exact 64-bit fold → full DuckDB oracle
       // (list_reduce); order-sensitivity asserted in TextAnalysisSpec
-      graft.operators.Partitioning.ensureMinParallelism(
-          t(s, dir, "documents").filter(col("text").isNotNull))
+      wide(t(s, dir, "documents").filter(col("text").isNotNull))
         .select(col("doc_id"), TextAnalysis.rollingHash(col("text")).as("rhash"))
         .orderBy(col("doc_id"))
     }),
 
     "text_repetition" -> ((s, dir) => {
       // intra-document repetition signals (Gopher-style gates)
-      graft.operators.Partitioning.ensureMinParallelism(
-          t(s, dir, "documents").filter(col("text").isNotNull))
+      wide(t(s, dir, "documents").filter(col("text").isNotNull))
         .select(col("doc_id"),
           round(TextAnalysis.duplicateNgramFraction(col("text"), 1), 6).as("dup_word_frac"),
           round(TextAnalysis.duplicateNgramFraction(col("text"), 2), 6).as("dup_bigram_frac"))
@@ -2088,8 +2095,7 @@ object SparkEntry {
       // Single scan: the profile expression runs inline next to the
       // group key — profile()+self-join would shuffle the corpus twice.
       val p = call_function("graft_text_profile", col("text"))
-      graft.operators.Partitioning.ensureMinParallelism(
-          t(s, dir, "documents").filter(col("text").isNotNull))
+      wide(t(s, dir, "documents").filter(col("text").isNotNull))
         .select(col("source"), p.getField("n_tokens").as("n_tokens"),
           round(p.getField("quality") * 1000000).cast("long").as("q_micros"),
           p.getField("lang_pred").as("lang_pred"),
@@ -2948,7 +2954,7 @@ object SparkEntry {
           crawlHtml(col("doc_id"), col("text"),
             lit("Shared section heading for crawl docs")).as("html"))
       val warcDir = TempDirs.scratch("crawl_warc_")
-      val records = docs.repartition(s.sparkContext.defaultParallelism).as[(Long, String)]
+      val records = wide(docs).as[(Long, String)]
         .mapPartitions(_.map { case (id, html) =>
           val tld = (id % 4) match {
             case 0 => "com"; case 1 => "co.uk"; case 2 => "github.io"; case _ => "org"
@@ -3357,7 +3363,7 @@ object SparkEntry {
           crawlHtml(col("doc_id"), col("text"),
             lit("WET extraction heading for conversion records")).as("html"))
       val warcDir = TempDirs.scratch("wet_src_")
-      val records = docs.repartition(s.sparkContext.defaultParallelism).as[(Long, String)]
+      val records = wide(docs).as[(Long, String)]
         .mapPartitions(_.map { case (id, html) =>
           val uri = s"http://w${id % 23}.example.org/d/$id"
           val payload = WarcIo.buildHttpResponse(200, "OK",
@@ -3462,7 +3468,7 @@ object SparkEntry {
           crawlHtml(col("doc_id"), col("text"),
             lit("WAT extraction heading")).as("html"))
       val warcDir = TempDirs.scratch("wat_src_")
-      val records = docs.repartition(s.sparkContext.defaultParallelism).as[(Long, String)]
+      val records = wide(docs).as[(Long, String)]
         .mapPartitions(_.map { case (id, html) =>
           val uri = s"http://wat${id % 19}.example.org/d/$id"
           val payload = WarcIo.buildHttpResponse(200, "OK",
@@ -3555,7 +3561,7 @@ object SparkEntry {
         .select(col("doc_id"),
           crawlHtml(col("doc_id"), col("text"), lit("CDX indexing heading")).as("html"))
       val warcDir = TempDirs.scratch("cdx_src_")
-      val records = docs.repartition(s.sparkContext.defaultParallelism).as[(Long, String)]
+      val records = wide(docs).as[(Long, String)]
         .mapPartitions(_.map { case (id, html) =>
           val uri = s"http://c${id % 13}.example.org/d/$id"
           val payload = WarcIo.buildHttpResponse(200, "OK",
@@ -4124,7 +4130,7 @@ object SparkEntry {
         .select(col("doc_id"),
           crawlHtml(col("doc_id"), col("text"), lit("CDX fetch heading")).as("html"))
       val warcDir = TempDirs.scratch("cdxf_src_")
-      val records = docs.repartition(s.sparkContext.defaultParallelism).as[(Long, String)]
+      val records = wide(docs).as[(Long, String)]
         .mapPartitions(_.map { case (id, html) =>
           val uri = s"http://c${id % 13}.example.org/d/$id"
           val payload = WarcIo.buildHttpResponse(200, "OK",
@@ -4215,7 +4221,7 @@ object SparkEntry {
         .select(col("doc_id"), col("text"))
       val root = TempDirs.scratch("wayback_")
       def records(html: DataFrame, date: String, idp: String): DataFrame =
-        html.repartition(s.sparkContext.defaultParallelism).as[(Long, String)].mapPartitions(_.map { case (id, h) =>
+        wide(html).as[(Long, String)].mapPartitions(_.map { case (id, h) =>
           val uri = s"http://c${id % 13}.example.org/d/$id"
           val payload = WarcIo.buildHttpResponse(200, "OK",
             Seq("Content-Type" -> "text/html; charset=utf-8"),
@@ -4276,9 +4282,9 @@ object SparkEntry {
       val docs = t(s, dir, "documents").where(col("text").isNotNull)
         .select(col("doc_id"), col("text"))
       val root = TempDirs.scratch("wayredir_")
-      val recs = docs.select(col("doc_id"),
-          crawlHtml(col("doc_id"), col("text"), lit("Redirect target")).as("html"))
-        .repartition(s.sparkContext.defaultParallelism).as[(Long, String)]
+      val recs = wide(docs.select(col("doc_id"),
+          crawlHtml(col("doc_id"), col("text"), lit("Redirect target")).as("html")))
+        .as[(Long, String)]
         .mapPartitions(_.flatMap { case (id, html) =>
           val host = s"http://c${id % 13}.example.org"
           def resp(path: String, payload: Array[Byte], tag: String) =

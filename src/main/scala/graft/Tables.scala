@@ -25,15 +25,13 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     memo.computeIfAbsent((spark, sfDir, name), { _ =>
-      // No loader-level repartition: the compute-bound operators
-      // (shingling, hashing, tokenizing — where a one-task scan of a
-      // single-row-group fixture actually hurts) each spread their own
-      // input via Partitioning.ensureMinParallelism at the point the
-      // per-row work starts. Doing it here instead taxed EVERY consumer
-      // with a full-table RoundRobin exchange — measured by the round-9
-      // driver bench as ~2x on shuffle-light queries (a5_gtid_set
+      // No loader-level repartition: a registry query whose first
+      // stage is CPU-bound per row widens its own scan (SparkEntry's
+      // `wide`). Doing it here instead taxed EVERY consumer with a
+      // full-table RoundRobin exchange — measured by the round-9
+      // graft.Bench run as ~2x on shuffle-light queries (a5_gtid_set
       // 0.32->0.80 s, k2_cdc_apply 0.36->0.86 s) for no gain on the
-      // heavy ones, which already spread themselves.
+      // heavy ones.
       val df = spark.read.parquet(s"$sfDir/$name.parquet")
       if (name != "events") df
       else df.schema("ts").dataType match {

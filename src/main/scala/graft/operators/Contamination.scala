@@ -34,9 +34,7 @@ object Contamination {
     * kept when the (6-dp rounded) fraction reaches `minOverlap`.
     */
   private def side(df: DataFrame, tag: Int, idCol: String, textCol: String, n: Int): DataFrame =
-    Partitioning.ensureMinParallelism(
-        df.select(col(idCol).as("doc_id"), col(textCol).as("text")))
-      .select(col("doc_id"), Dedup.shingleHashes(col("text"), n).as("sh_arr"))
+    df.select(col(idCol).as("doc_id"), Dedup.shingleHashes(col(textCol), n).as("sh_arr"))
       .select(lit(tag).as("side"), col("doc_id"),
         size(col("sh_arr")).as("n_sh"), explode(col("sh_arr")).as("sh"))
 

@@ -21,11 +21,10 @@ object CorpusDiff {
 
   def diff(oldDocs: DataFrame, newDocs: DataFrame,
            idCol: String, textCol: String): DataFrame = {
+    // null text digests to a sentinel so two null-content versions
+    // compare "unchanged" (null === null would read as modified)
     def digests(df: DataFrame) =
-      Partitioning.ensureMinParallelism(df)
-        // null text digests to a sentinel so two null-content versions
-        // compare "unchanged" (null === null would read as modified)
-        .select(col(idCol),
+      df.select(col(idCol),
           coalesce(md5(dedup.Dedup.normText(col(textCol))), lit("null")).as("h"))
     val o = digests(oldDocs).withColumnRenamed("h", "old_hash")
     val n = digests(newDocs).withColumnRenamed("h", "new_hash")

@@ -25,8 +25,7 @@ object GapFill {
   def dailyCarryForward(df: DataFrame, keyCol: String, dayCol: String,
                         valueCol: String, startDay: String, endDay: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val actual = Partitioning.ensureMinParallelism(df)
-      .filter(col(dayCol).between(lit(startDay).cast("date"), lit(endDay).cast("date")))
+    val actual = df.filter(col(dayCol).between(lit(startDay).cast("date"), lit(endDay).cast("date")))
       .groupBy(col(keyCol), col(dayCol).as("day"))
       .agg(sum(col(valueCol).cast("decimal(18,6)")).as("__dec"))
     val spine = df.select(col(keyCol)).distinct()

@@ -4,20 +4,15 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
-/** Partitioning helpers shared by CPU-heavy operators.
+/** Pinning and skew helpers shared by operators.
   *
-  * A small parquet file (≪ `files.maxPartitionBytes`) scans as ONE
-  * partition, so a compute-bound per-row stage (shingling, hashing,
-  * simhash folds) runs on one core no matter how many the cluster has —
-  * measured 15s single-task vs sub-second parallel on the documents
-  * fixture. At real scale inputs are already wide; the round-robin
-  * repartition only fires when the scan is narrower than the cluster.
+  * No helper here sizes an operator's input: an operator takes the
+  * partitioning it is given and adaptive execution sizes its shuffles.
+  * The one scan-widening rule lives with the query registry
+  * ([[graft.SparkEntry]]), the only caller that knows its fixture scans
+  * are single-row-group files.
   */
 object Partitioning {
-  def ensureMinParallelism(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
 
   /** The one place graft pins data: runs `body`, then releases every pin
     * it handed out in a `finally`, so a failed body (a failed write, a

@@ -208,8 +208,7 @@ object TableStats {
     require(k >= 1, s"deviation multiplier must be >= 1, got $k")
     import org.apache.spark.sql.expressions.Window
     val byGroup = Window.partitionBy(col(groupCol))
-    val ranked = Partitioning.ensureMinParallelism(df)
-      .filter(col(valueCol).isNotNull)
+    val ranked = df.filter(col(valueCol).isNotNull)
       .withColumn("_rn", row_number().over(byGroup.orderBy(col(valueCol), col(idCol))))
       .withColumn("_n", count(lit(1)).over(byGroup))
       .withColumn("_medrank", expr("(_n + 1) div 2"))
@@ -234,8 +233,7 @@ object TableStats {
     * be a real data point.
     */
   def histQuantileSketch(df: DataFrame, groupCol: String, valueCol: String): DataFrame =
-    Partitioning.ensureMinParallelism(df)
-      .filter(col(valueCol).isNotNull && col(valueCol) >= 0)
+    df.filter(col(valueCol).isNotNull && col(valueCol) >= 0)
       .groupBy(col(groupCol),
         length(bin(col(valueCol).cast("long") + 1)).as("bin"))
       .agg(count(lit(1)).as("cnt"))
@@ -288,8 +286,7 @@ object TableStats {
                groupCol: String, bucket: org.apache.spark.sql.Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     def counts(df: DataFrame, as: String) =
-      Partitioning.ensureMinParallelism(df)
-        .groupBy(col(groupCol), bucket.as("bucket"))
+      df.groupBy(col(groupCol), bucket.as("bucket"))
         .agg(count(lit(1)).as(as))
     val joined = counts(oldSnap, "a_cnt")
       .join(counts(newSnap, "b_cnt"), Seq(groupCol, "bucket"), "full_outer")
@@ -320,7 +317,7 @@ object TableStats {
     */
   def cmHeavyHitters(docs: DataFrame, textCol: String,
                      depth: Int = 4, width: Int = 1024, k: Int = 30): DataFrame = {
-    val toks = Partitioning.ensureMinParallelism(docs.filter(col(textCol).isNotNull))
+    val toks = docs.filter(col(textCol).isNotNull)
       .select(explode(graft.operators.text.TextAnalysis.tokens(col(textCol))).as("token"))
       .filter(col("token") =!= "")
     val exact = toks.groupBy(col("token")).agg(count(lit(1)).as("exact_cnt"))

@@ -29,8 +29,7 @@ object Dedup {
     * text) so shuffle rows are fixed-width.
     */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    graft.operators.Partitioning.ensureMinParallelism(docs)
-      .select(col(idCol), md5(normText(col(textCol))).as("content_hash"))
+    docs.select(col(idCol), md5(normText(col(textCol))).as("content_hash"))
       .groupBy(col("content_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
@@ -56,8 +55,7 @@ object Dedup {
     // (interpreted lambda) — 6.6× slower at the 50× probe corpus
     val paras = call_function("graft_paragraphs", col(textCol), lit(wordsPerPara))
     val w = Window.partitionBy(col("para_hash"))
-    val exploded = graft.operators.Partitioning.ensureMinParallelism(docs)
-      .select(col(idCol), posexplode(paras).as(Seq("para_idx", "para")))
+    val exploded = docs.select(col(idCol), posexplode(paras).as(Seq("para_idx", "para")))
       .select(col(idCol), col("para_idx"), md5(col("para")).as("para_hash"))
     exploded
       .withColumn("n_copies", count(lit(1)).over(w))
@@ -134,8 +132,7 @@ object Dedup {
     */
   private def pairCommonCounts(docs: DataFrame, idCol: String, textCol: String,
                                n: Int, maxShingleDf: Int): DataFrame = {
-    val exploded = graft.operators.Partitioning
-      .ensureMinParallelism(docs.select(col(idCol).as("doc_id"), col(textCol)))
+    val exploded = docs.select(col(idCol).as("doc_id"), col(textCol))
       .select(col("doc_id"), shingleHashes(col(textCol), n).as("sh_arr"))
       .select(col("doc_id"), size(col("sh_arr")).as("n_shingles"),
         explode(col("sh_arr")).as("sh"))
@@ -164,8 +161,7 @@ object Dedup {
                                        n: Int, threshold: Double,
                                        maxShingleDf: Int): DataFrame = {
     def side(df: DataFrame, tag: Int): DataFrame =
-      graft.operators.Partitioning.ensureMinParallelism(
-          df.select(col(idCol).as("doc_id"), col(textCol).as("text")))
+      df.select(col(idCol).as("doc_id"), col(textCol).as("text"))
         .select(col("doc_id"), shingleHashes(col("text"), n).as("sh_arr"))
         .select(lit(tag).as("side"), col("doc_id"),
           size(col("sh_arr")).as("n_sh"), explode(col("sh_arr")).as("sh"))
@@ -385,8 +381,7 @@ object Dedup {
                        n: Int = 3, tauNum: Int = 3, tauDen: Int = 5)
       : (DataFrame, DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    val sets = graft.operators.Partitioning
-      .ensureMinParallelism(corpus.select(col(idCol).as("doc_id"), col(textCol).as("__text")))
+    val sets = corpus.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
       .select(col("doc_id"), shingleHashes(col("__text"), n).as("sh_arr"))
       .filter(size(col("sh_arr")) > 0)
     val exploded = sets
@@ -412,8 +407,7 @@ object Dedup {
                                 idCol: String, textCol: String,
                                 n: Int = 3, tauNum: Int = 3, tauDen: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val bSets = graft.operators.Partitioning
-      .ensureMinParallelism(batch.select(col(idCol).as("doc_id"), col(textCol).as("__text")))
+    val bSets = batch.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
       .select(col("doc_id"), shingleHashes(col("__text"), n).as("sh_arr"))
       .filter(size(col("sh_arr")) > 0)
     val bExploded = bSets
@@ -503,8 +497,7 @@ object Dedup {
                          maxBucket: Int = 10000): DataFrame = {
     require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen, "tau must be in (0, 1]")
     import org.apache.spark.sql.expressions.Window
-    val sets = graft.operators.Partitioning
-      .ensureMinParallelism(docs.select(col(idCol).as("doc_id"), col(textCol).as("__text")))
+    val sets = docs.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
       .select(col("doc_id"), shingleHashes(col("__text"), n).as("sh_arr"))
       .filter(size(col("sh_arr")) > 0)
     val exploded = sets

@@ -30,8 +30,7 @@ object MinHashDedup {
     */
   private[graft] def portableSignatures(docs: DataFrame, idCol: String, textCol: String,
                                         n: Int, k: Int): DataFrame =
-    graft.operators.Partitioning
-      .ensureMinParallelism(docs.select(col(idCol).as("doc_id"), col(textCol).as("text")))
+    docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
       .select(col("doc_id"),
         call_function("graft_minhash_md5", col("text"), lit(n), lit(k)).as("sig"))
       .filter(size(col("sig")) > 0)

@@ -78,8 +78,7 @@ object SimHashDedup {
       zip_with(col("votes"), seq60, (v, b) =>
         when(v > 0, call_function("shiftleft", lit(1L), b)).otherwise(lit(0L))),
       lit(0L), (acc, x) => acc + x)
-    graft.operators.Partitioning
-      .ensureMinParallelism(docs.select(col(idCol).as("doc_id"), col(textCol).as("text")))
+    docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
       .select(col("doc_id"), hs.as("hs"))
       .select(col("doc_id"), votes.as("votes"))
       .select(col("doc_id"), fp.as("fingerprint"))

@@ -1150,17 +1150,6 @@ object Multimodal {
     }
   }
 
-  /** Size partitions so each holds ~`targetBytes` of payload — binary
-    * rows are fat (MBs), so the default 128 MB parquet split with
-    * thousands of rows per task would OOM executors at 100 TB. Uses the
-    * per-row size column, not row count.
-    */
-  def repartitionBySize(df: DataFrame, sizeCol: String, targetBytes: Long): DataFrame = {
-    val total = df.agg(sum(col(sizeCol))).first().getLong(0)
-    val parts = math.max(1, (total / targetBytes).toInt)
-    df.repartition(parts)
-  }
-
   /** Feature extraction: batched per partition (one codec instance per
     * task, rows streamed — the `mapInPandas` batch shape).
     */

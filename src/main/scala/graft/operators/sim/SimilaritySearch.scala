@@ -99,8 +99,7 @@ object SimilaritySearch {
     * aggregate — the output is `dim` rows, broadcastable anywhere.
     */
   def dimBounds(corpus: DataFrame, vecCol: String): DataFrame =
-    graft.operators.Partitioning.ensureMinParallelism(corpus)
-      .select(posexplode(col(vecCol)).as(Seq("idx", "x")))
+    corpus.select(posexplode(col(vecCol)).as(Seq("idx", "x")))
       .groupBy(col("idx"))
       .agg(min(col("x").cast("double")).as("mn"),
         max(col("x").cast("double")).as("mx"))
@@ -115,8 +114,7 @@ object SimilaritySearch {
     */
   def quantizeTrained(corpus: DataFrame, idCol: String, vecCol: String,
                       bounds: DataFrame): DataFrame =
-    graft.operators.Partitioning.ensureMinParallelism(corpus)
-      .select(col(idCol), posexplode(col(vecCol)).as(Seq("idx", "x")))
+    corpus.select(col(idCol), posexplode(col(vecCol)).as(Seq("idx", "x")))
       .join(broadcast(bounds), "idx")
       .select(col(idCol), col("idx"),
         when(col("mx") === col("mn"), lit(0L)).otherwise(

@@ -61,8 +61,7 @@ object Bm25 {
     * like every other text-derived operator.
     */
   def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val nonNull = graft.operators.Partitioning.ensureMinParallelism(
-      docs.filter(col(textCol).isNotNull))
+    val nonNull = docs.filter(col(textCol).isNotNull)
     // (dl, term, tf) fused in-row ([[graft.plans.TermFreqs]]): the old
     // size(tokens) + explode(tokens) → groupBy(doc_id, dl, term) chain
     // tokenized every document twice and shuffled per-OCCURRENCE rows

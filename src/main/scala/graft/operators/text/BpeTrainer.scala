@@ -60,8 +60,7 @@ object BpeTrainer {
   def train(docs: DataFrame, textCol: String, merges: Int): DataFrame = pinned { pins =>
     val spark = docs.sparkSession
     import spark.implicits._
-    var vocab = pins.once(graft.operators.Partitioning.ensureMinParallelism(
-      docs.filter(col(textCol).isNotNull))
+    var vocab = pins.once(docs.filter(col(textCol).isNotNull)
       .select(explode(TextAnalysis.tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .select(seqOf(col("w")).as("seq"), col("cnt")))
@@ -124,8 +123,7 @@ object BpeTrainer {
   def trainLocal(docs: DataFrame, textCol: String, merges: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val vocab: Array[(String, Long)] = graft.operators.Partitioning.ensureMinParallelism(
-      docs.filter(col(textCol).isNotNull))
+    val vocab: Array[(String, Long)] = docs.filter(col(textCol).isNotNull)
       .select(explode(TextAnalysis.tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .as[(String, Long)].collect()
@@ -207,8 +205,7 @@ object BpeTrainer {
     */
   def encode(docs: DataFrame, idCol: String, textCol: String,
              mergeTable: Seq[(String, String)]): DataFrame = {
-    val words = graft.operators.Partitioning.ensureMinParallelism(
-      docs.filter(col(textCol).isNotNull))
+    val words = docs.filter(col(textCol).isNotNull)
       .select(col(idCol), posexplode(TextAnalysis.tokens(col(textCol))).as(Seq("wpos", "w")))
     val mergedSeq = mergeTable.foldLeft(seqOf(col("w"))) { case (acc, (l, r)) =>
       replace(acc, lit(s" $l  $r "), lit(s" $l$r "))

@@ -422,15 +422,14 @@ object HtmlExtract extends Serializable {
 
   /** Explode each document's HTML into its kept content blocks:
     * `(id, block_ix, tag, text, n_chars, link_chars)`. Pure per-row
-    * work — parallelism is widened for the compute, no shuffle added.
+    * work over the input's partitions, no shuffle added.
     */
   def contentBlocksDf(df: DataFrame, idCol: String, htmlCol: String,
       minChars: Int = 25, maxLinkDensity: Double = 0.33): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val src: Dataset[(Long, String)] = graft.operators.Partitioning
-      .ensureMinParallelism(df.select(col(idCol).cast("long"), col(htmlCol)))
-      .as[(Long, String)]
+    val src: Dataset[(Long, String)] =
+      df.select(col(idCol).cast("long"), col(htmlCol)).as[(Long, String)]
     src.flatMap { case (id, html) =>
       if (html == null) Iterator.empty
       else content(html, minChars, maxLinkDensity).iterator
@@ -442,9 +441,7 @@ object HtmlExtract extends Serializable {
   def linksDf(df: DataFrame, idCol: String, htmlCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val src = graft.operators.Partitioning
-      .ensureMinParallelism(df.select(col(idCol).cast("long"), col(htmlCol)))
-      .as[(Long, String)]
+    val src = df.select(col(idCol).cast("long"), col(htmlCol)).as[(Long, String)]
     src.flatMap { case (id, html) =>
       if (html == null) Iterator.empty
       else links(html).iterator.zipWithIndex.map { case ((h, a), ix) => (id, ix, h, a) }

@@ -47,8 +47,7 @@ object SpanDedup {
   def duplicatedSpans(docs: DataFrame, idCol: String, textCol: String,
                       n: Int = 10, minCount: Long = 2): DataFrame = {
     require(n >= 1 && minCount >= 2, s"need n>=1, minCount>=2; got n=$n, minCount=$minCount")
-    val grams = graft.operators.Partitioning.ensureMinParallelism(
-        docs.filter(col(textCol).isNotNull))
+    val grams = docs.filter(col(textCol).isNotNull)
       .select(col(idCol), posexplode(
         call_function("graft_span_hashes", col(textCol), lit(n)))
         .as(Seq("pos", "gh")))
@@ -91,8 +90,7 @@ object SpanDedup {
     */
   def buildSpanIndex(train: DataFrame, textCol: String, n: Int = 10): DataFrame = {
     require(n >= 1, s"need n>=1; got n=$n")
-    graft.operators.Partitioning.ensureMinParallelism(
-        train.filter(col(textCol).isNotNull))
+    train.filter(col(textCol).isNotNull)
       .select(explode(call_function("graft_span_hashes", col(textCol), lit(n))).as("gh"))
       .distinct()
   }
@@ -106,8 +104,7 @@ object SpanDedup {
                                     n: Int = 10): DataFrame = {
     require(n >= 1, s"need n>=1; got n=$n")
     val byDoc = Window.partitionBy(col(idCol)).orderBy(col("pos"))
-    graft.operators.Partitioning.ensureMinParallelism(
-        eval.filter(col(textCol).isNotNull))
+    eval.filter(col(textCol).isNotNull)
       .select(col(idCol), posexplode(
         call_function("graft_span_hashes", col(textCol), lit(n)))
         .as(Seq("pos", "gh")))

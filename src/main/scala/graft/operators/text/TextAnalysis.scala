@@ -141,8 +141,7 @@ object TextAnalysis {
     * the cut at k is deterministic on any engine.
     */
   def topNgrams(docs: DataFrame, textCol: String, n: Int = 3, k: Int = 50): DataFrame =
-    graft.operators.Partitioning.ensureMinParallelism(docs)
-      .select(explode(call_function("graft_shingles", col(textCol), lit(n))).as("ngram"))
+    docs.select(explode(call_function("graft_shingles", col(textCol), lit(n))).as("ngram"))
       .groupBy("ngram").agg(count(lit(1)).as("doc_freq"))
       .orderBy(col("doc_freq").desc, col("ngram"))
       .limit(k)
@@ -152,17 +151,14 @@ object TextAnalysis {
     * windows advancing by `stride` (overlap `width - stride` keeps
     * context across boundaries; stride == width is disjoint). The
     * native `graft_word_windows` expression blocks in one pass at scan
-    * speed, then one posexplode; the chunking itself never shuffles
-    * (the only possible exchange is `ensureMinParallelism`'s
-    * round-robin widening when the input arrives in fewer partitions
-    * than the session's parallelism — absent on any well-partitioned
-    * corpus scan). NULL text yields no chunks (posexplode of a null
-    * array emits nothing), mirrored by the oracle's NOT NULL guard.
+    * speed, then one posexplode; the chunking never shuffles and keeps
+    * the input's partitioning. NULL text yields no chunks (posexplode
+    * of a null array emits nothing), mirrored by the oracle's NOT NULL
+    * guard.
     */
   def chunkWindows(docs: DataFrame, idCol: String, textCol: String,
                    width: Int, stride: Int): DataFrame =
-    graft.operators.Partitioning.ensureMinParallelism(docs)
-      .select(col(idCol), posexplode(
+    docs.select(col(idCol), posexplode(
         call_function("graft_word_windows", col(textCol), lit(width), lit(stride)))
         .as(Seq("chunk_idx", "chunk")))
       .withColumn("n_tokens",
@@ -186,8 +182,7 @@ object TextAnalysis {
     */
   def tfIdfTopK(docs: DataFrame, idCol: String, textCol: String, k: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val nonNull = graft.operators.Partitioning.ensureMinParallelism(
-      docs.filter(col(textCol).isNotNull))
+    val nonNull = docs.filter(col(textCol).isNotNull)
     val nDocs = nonNull.agg(count(lit(1)).as("n_docs"))
     // per-doc (term, tf) fused in-row (graft_term_freqs — the Bm25
     // postings rationale): the groupBy's groups were per-document
@@ -246,8 +241,7 @@ object TextAnalysis {
     // consume the reference tokenization, and Catalyst shares no
     // subtrees — the ref slice tokenized three times per call (§5)
     val refToks = pins.once(
-      graft.operators.Partitioning.ensureMinParallelism(
-        ref.filter(col(textCol).isNotNull)).select(tokens(col(textCol)).as("toks")))
+      ref.filter(col(textCol).isNotNull).select(tokens(col(textCol)).as("toks")))
     val vocab = refToks.select(explode(col("toks")).as("w"))
       .agg(countDistinct(col("w")).as("v_size"))
     val big = refToks.select(explode(bigrams(col("toks"))).as("bg"))
@@ -255,8 +249,7 @@ object TextAnalysis {
     val hist = refToks
       .select(explode(slice(col("toks"), lit(1), greatest(size(col("toks")) - 1, lit(0)))).as("w1"))
       .groupBy(col("w1")).agg(count(lit(1)).as("c1"))
-    val out = graft.operators.Partitioning.ensureMinParallelism(
-        docs.filter(col(textCol).isNotNull))
+    val out = docs.filter(col(textCol).isNotNull)
       .select(col(idCol), explode(bigrams(tokens(col(textCol)))).as("bg"))
       .groupBy(col(idCol), col("bg")).agg(count(lit(1)).as("cnt"))
       .withColumn("w1", substring_index(col("bg"), " ", 1))
@@ -290,8 +283,7 @@ object TextAnalysis {
     * past their aggregate.
     */
   def gopherRepetition(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val P = graft.operators.Partitioning
-    val base = P.ensureMinParallelism(docs.filter(col(textCol).isNotNull))
+    val base = docs.filter(col(textCol).isNotNull)
     val toks = tokens(col(textCol))
     def grams(n: Int): Column =
       when(size(toks) < n, array().cast("array<string>"))
@@ -389,7 +381,7 @@ object TextAnalysis {
     * replaces).
     */
   private def wordCounts(df: DataFrame, textCol: String, keep: Seq[Column]): DataFrame =
-    graft.operators.Partitioning.ensureMinParallelism(df.filter(col(textCol).isNotNull))
+    df.filter(col(textCol).isNotNull)
       .select(keep :+ explode(
         call_function("graft_term_freqs", col(textCol)).getField("entries")).as("e"): _*)
       .withColumn("w", col("e.term")).withColumn("cnt", col("e.tf")).drop("e")
@@ -569,8 +561,7 @@ object TextAnalysis {
     */
   def pmiCollocations(docs: DataFrame, textCol: String, k: Int = 50,
                       minCount: Int = 5): DataFrame = {
-    val nonNull = graft.operators.Partitioning.ensureMinParallelism(
-      docs.filter(col(textCol).isNotNull))
+    val nonNull = docs.filter(col(textCol).isNotNull)
     // per-doc (term, tf) pre-aggregation — NO ''-filter here: the old
     // occurrence count included the ''-token of empty docs in t_uni,
     // and that total must not change
@@ -631,13 +622,8 @@ object TextAnalysis {
     def micros(num: String, den: String): String =
       s"CASE WHEN $den = 0 THEN 0 ELSE ($num * 2000000 + $den) div ($den * 2) END"
     // stateless per-row projection: runs unchanged over a streaming
-    // DataFrame (where the repartition widening neither applies nor
-    // is needed — micro-batch parallelism comes from the source)
-    val base =
-      if (docs.isStreaming) docs
-      else graft.operators.Partitioning.ensureMinParallelism(docs)
-    base
-      .select(col(idCol), g.as("g"))
+    // DataFrame
+    docs.select(col(idCol), g.as("g"))
       .select(col(idCol),
         col("g.n_words").as("nw"), col("g.sum_word_len").as("swl"),
         col("g.n_sym").as("nsym"), col("g.n_lines").as("nl"),
@@ -712,7 +698,7 @@ object TextAnalysis {
     */
   def profile(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val p = call_function("graft_text_profile", col(textCol))
-    graft.operators.Partitioning.ensureMinParallelism(docs).select(
+    docs.select(
       col(idCol),
       p.getField("n_tokens").as("n_tokens"),
       p.getField("n_subwords").as("n_subwords"),

@@ -49,11 +49,16 @@ class JdbcUpsertSink(
     sessionSetup: Seq[String] = Nil
 ) extends UpsertSink {
 
+  // driver-side: the ledger DDL runs once per sink instance, not per batch
+  @transient private var ledgerCreated = false
+
   override def applyBatch(batch: DataFrame, epochId: Long): Unit = {
-    val conn0 = connect()
-    try {
-      conn0.createStatement().execute(SqlBuilder.ledgerCreate(ledgerSchema))
-    } finally conn0.close()
+    if (!ledgerCreated) {
+      val conn0 = connect()
+      try conn0.createStatement().execute(SqlBuilder.ledgerCreate(ledgerSchema))
+      finally conn0.close()
+      ledgerCreated = true
+    }
 
     val ordered = batch
       .repartition(numPartitions, col(keyCol))

@@ -72,7 +72,7 @@ class KafkaEnvelopeSink(host: String, port: Int, topicPrefix: String,
     }
     // repartition by row key + seq-sort within partitions: every key
     // lives in exactly one producing task and its messages hit the wire
-    // in commit order — the same ordering move ParquetUpsertSink makes,
+    // in commit order — the same ordering move the upsert sinks make,
     // and what downstream log compaction / replay lean on (one key maps
     // to one kafka partition via the default partitioner, so per-key
     // wire order IS per-partition log order)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.operators.Partitioning.pinned
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -143,58 +143,15 @@ case class DdlBarrierEvent(db: String, table: String, sql: String, seq: Long)
   *      history-map state;
   *   2. reduce to the final state per key: each key's last op by seq
   *      (replace/delete/update collapse);
-  *   3. apply that state via the pluggable writer (JDBC upsert on a real
-  *      cluster; parquet-backed table in tests) and append the ledger in
-  *      the same unit of work, so rows and ledger marker commit together.
+  *   3. apply that state via the pluggable writer and append the ledger
+  *      in the same unit of work, so rows and ledger marker commit
+  *      together.
   *
-  * Only [[ParquetUpsertSink]] anti-joins its ledger first; the JDBC sink
-  * re-applies a replayed epoch and writes its ledger rows again.
+  * The production implementation is [[graft.sinks.JdbcUpsertSink]]: it
+  * re-applies a replayed epoch and writes its ledger rows again. The
+  * specs' parquet-table sink lives in test scope, because its overwrite
+  * of the table directory is not crash-safe.
   */
 trait UpsertSink extends Serializable {
   def applyBatch(batch: DataFrame, epochId: Long): Unit
-}
-
-/** File-table implementation used by tests and local runs: maintains the
-  * materialized table as parquet and the applied-GTID ledger alongside.
-  * The JDBC production variant swaps `merge` for batched
-  * `REPLACE INTO` / `DELETE` prepared statements per partition
-  * (reference `driver/mysql/sql/builder.go`) — same dataflow.
-  */
-class ParquetUpsertSink(spark: SparkSession, tableDir: String, ledgerDir: String,
-                        keyCol: String, seqCol: String, opCol: String) extends UpsertSink {
-
-  override def applyBatch(batch: DataFrame, epochId: Long): Unit = {
-    import org.apache.spark.sql.SaveMode
-    if (batch.isEmpty) return
-    val ledger = readOrEmpty(ledgerDir)
-    val fresh = ledger match {
-      case Some(l) => batch.join(broadcast(l.select("gtid").distinct()), Seq("gtid"), "left_anti")
-      case None    => batch
-    }
-    // final state per key for this batch, applied over current table state
-    val current = readOrEmpty(tableDir)
-    val incoming = graft.operators.CdcBatch.applyChangeLog(
-      fresh.repartition(col(keyCol)).sortWithinPartitions(col(seqCol)),
-      keyCol, seqCol, opCol)
-    val deletedKeys = fresh.groupBy(col(keyCol))
-      .agg(max_by(col(opCol), col(seqCol)).as("last_op"))
-      .filter(col("last_op") === "d").select(col(keyCol))
-    val merged = current match {
-      case Some(cur) =>
-        cur.join(fresh.select(keyCol).distinct(), Seq(keyCol), "left_anti")
-          .unionByName(incoming, allowMissingColumns = true)
-      case None => incoming
-    }
-    // staged through .tmp: the merge reads tableDir, so it cannot
-    // overwrite tableDir directly
-    merged.join(deletedKeys, Seq(keyCol), "left_anti")
-      .write.mode(SaveMode.Overwrite).parquet(tableDir + ".tmp")
-    spark.read.parquet(tableDir + ".tmp").write.mode(SaveMode.Overwrite).parquet(tableDir)
-    val gtids = fresh.select("gtid").distinct()
-      .withColumn("epoch_id", lit(epochId))
-    gtids.write.mode(SaveMode.Append).parquet(ledgerDir)
-  }
-
-  private def readOrEmpty(dir: String): Option[DataFrame] =
-    if (new java.io.File(dir).exists()) Some(spark.read.parquet(dir)) else None
 }

@@ -364,6 +364,22 @@ class JdbcUpsertSinkSpec extends SparkSpec {
     assert(replaces.map(e => tierOf(e.sql) * e.batchSize).sum == 300)
   }
 
+  test("the ledger CREATE runs once per sink instance, not once per batch") {
+    JdbcRecorder.clear()
+    val sink = new JdbcUpsertSink(() => JdbcRecorder.connection(), td,
+      "job1", "ledger", numPartitions = 1)
+    (0 until 3).foreach { e =>
+      val rows = (1 to 4).map(i => (i.toLong, i.toLong + e, e * 10L + i, "u", s"u:$e:$i"))
+      sink.applyBatch(rows.toDF("key", "v", "seq", "op", "gtid"), e.toLong)
+    }
+    val evs = JdbcRecorder.events.toArray(Array.empty[JdbcRecorder.Exec]).toSeq
+    assert(evs.count(_.sql.startsWith("CREATE TABLE IF NOT EXISTS")) == 1,
+      evs.map(_.sql).mkString("\n"))
+    // every batch still writes its own ledger rows
+    assert(evs.filter(_.sql.startsWith("INSERT INTO `ledger`.`gtid_executed`"))
+      .map(_.batchSize) == Seq(4, 4, 4))
+  }
+
   test("deadlocked tx rolls back and replays identically on a fresh connection") {
     JdbcRecorder.clear()
     RetryState.reset(nFailures = 2) // first two commits deadlock, third lands

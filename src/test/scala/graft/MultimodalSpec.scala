@@ -420,14 +420,6 @@ class MultimodalSpec extends SparkSpec {
     assert(feats(0).exists(_ != 0f)) // and they are real, not zeros
   }
 
-  test("repartitionBySize targets byte budget") {
-    val df = Multimodal.synthesize(spark, 100).toDF()
-      .withColumn("n_bytes", org.apache.spark.sql.functions.length(org.apache.spark.sql.functions.col("payload")))
-    val out = Multimodal.repartitionBySize(df, "n_bytes", 16 * 1024)
-    assert(out.rdd.getNumPartitions >= 2)
-    assert(out.count() == 100)
-  }
-
   test("dHash: identical images match, brightness shift is invariant, crops differ") {
     val codec = Multimodal.PpmCodec
     def img(shift: Int, scale: Int): Array[Byte] = {

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Partitioning
+import graft.operators.{Contamination, Partitioning}
+import graft.operators.dedup.Dedup
+import graft.operators.text.TextAnalysis
 
 class PartitioningSpec extends SparkSpec {
 
@@ -110,5 +112,37 @@ class PartitioningSpec extends SparkSpec {
       "connectedComponents must release its edge pins and superseded label rounds")
     assert(labels.as[(Long, Long)].collect().toMap ==
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 7L -> 7L, 8L -> 7L))
+  }
+
+  test("building an operator's lazy frame over an exchange-fed input runs no Spark job") {
+    import spark.implicits._
+    val docs = (0 until 60).map(i => (i.toLong, s"alpha beta gamma delta w${i % 7} epsilon zeta"))
+      .toDF("doc_id", "text")
+    // the train frame carries an exchange: a left_semi join on an aggregated range
+    val kept = spark.range(0, 120).groupBy((col("id") % 40).as("doc_id")).agg(count(lit(1)).as("n"))
+    val train = docs.join(kept, Seq("doc_id"), "left_semi")
+    val eval = docs.filter(col("doc_id") >= 40)
+    val sc = spark.sparkContext
+    def inGroup[T](group: String)(body: => T): T = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    val built = inGroup("lazy-build") {
+      Seq(Contamination.evalOverlap(train, eval, "doc_id", "text", n = 3, minOverlap = 0.1),
+        TextAnalysis.profile(train, "doc_id", "text"),
+        Dedup.ngramJaccardPairs(train, "doc_id", "text", n = 3, threshold = 0.5))
+    }
+    // job events reach the status tracker in order: once a later marker
+    // job is visible, any job the build started is visible too
+    inGroup("lazy-build-marker")(spark.range(1).count())
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup("lazy-build-marker").isEmpty &&
+      System.nanoTime() < deadline) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup("lazy-build-marker").nonEmpty)
+    assert(sc.statusTracker.getJobIdsForGroup("lazy-build").isEmpty,
+      s"jobs run while building: ${sc.statusTracker.getJobIdsForGroup("lazy-build").toSeq}")
+    // the frames still run: the 40 joined train docs profile one row each
+    assert(built(1).count() == 40)
+    assert(built(0).count() > 0 && built(2).count() > 0)
   }
 }
