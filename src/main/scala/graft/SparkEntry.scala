@@ -1992,8 +1992,7 @@ object SparkEntry {
       // working-set pin survives through the parquet write (one fewer
       // corpus pass) and the returned lineage is the written files —
       // must be row-identical to pipeline_curate (same oracle)
-      val out = java.nio.file.Files.createTempDirectory("graft_curate_to_")
-        .resolve("corpus").toString
+      val out = TempDirs.scratch("curate_to_") + "/corpus"
       graft.operators.TrainingDataPipeline.curateTo(
           t(s, dir, "documents"), "doc_id", "text", out,
           minQuality = 0.5, jaccardThreshold = 0.5, maxShingleDf = 50)

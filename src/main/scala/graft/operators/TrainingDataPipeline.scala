@@ -15,12 +15,14 @@ import graft.operators.text.TextAnalysis
   *      (min-id representative per hash — one shuffle);
   *   3. near-dup pair detection among survivors (n-gram Jaccard,
   *      capped-bucket candidate generation);
-  *   4. transitive clustering (min-label propagation);
+  *   4. transitive clustering ([[Dedup.connectedComponents]]: one
+  *      driver union-find pass over a broadcast-sized pair graph, the
+  *      near-dup norm; pointer-jumping label rounds above that size);
   *   5. keep one representative per cluster (the min id).
   *
   * Everything stays declarative, so Catalyst pipelines the gate into
   * the scan and the whole flow is ~4 key-partitioned shuffles plus the
-  * clustering iterations.
+  * clustering step.
   */
 object TrainingDataPipeline {
 
@@ -87,15 +89,14 @@ object TrainingDataPipeline {
       .drop("__keep"))
 
     // 3.+4. near-dup clusters among exact-unique survivors.
-    // connectedComponents iterates eagerly (localCheckpoint fixpoint),
-    // so by the time dropIds exists the pin has served its multi-
-    // consumer purpose.
+    // connectedComponents is eager and its output reads no pin (a local
+    // relation, or a kept checkpoint), so by the time dropIds exists the
+    // pin has served its multi-consumer purpose.
     val pairs = Dedup.ngramJaccardPairs(uniq, idCol, textCol,
       n = shingleN, threshold = jaccardThreshold, maxShingleDf = maxShingleDf)
     val dropIds = Dedup.connectedComponents(pairs)
       .filter(col("node") =!= col("cluster"))
       .select(col("node").as("__drop"))
-      .localCheckpoint(true) // cluster-non-rep sized, i.e. small
     (uniq, dropIds)
   }
 
@@ -129,8 +130,10 @@ object TrainingDataPipeline {
     * inflates eval scores by the near-dup rate of the corpus. The
     * split key is the cluster representative (min id via transitive
     * min-label propagation); singleton docs represent themselves.
-    * Costs one pair-generation pass + the O(log d) label rounds —
-    * run it where eval integrity matters more than a per-doc hash.
+    * Costs one pair-generation pass + the clustering step (one driver
+    * union-find pass for a broadcast-sized pair graph, else O(log d)
+    * label rounds) — run it where eval integrity matters more than a
+    * per-doc hash.
     */
   def leakFreeSplit(docs: DataFrame, idCol: String, textCol: String,
                     splits: Seq[(String, Double)] =

@@ -1,7 +1,9 @@
 package graft.operators.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import graft.operators.Partitioning
 import graft.operators.Partitioning.pinned
 
 /** Deduplication operators for training-data pipelines (beyond-parity,
@@ -305,23 +307,98 @@ object Dedup {
       .select(col(idCol), col("component"), col("kept"), col(scoreCol))
   }
 
-  /** Full transitive dedup clusters: min-label propagation over the
-    * near-dup pair graph until fixpoint (bounded by `maxIters` —
-    * iterations needed = graph diameter, and near-dup graphs are
-    * shallow). Each iteration is one hash join + aggregate; a
-    * checkpoint per round truncates the growing lineage so iteration N
-    * doesn't replan/replay iterations 1..N-1 — the standard iterative-
-    * algorithm discipline on Spark — and the superseded round releases
-    * at once. Output: (node, cluster) where cluster = min doc id
-    * reachable through pairs; it is the last round's checkpoint.
+  /** Full transitive dedup clusters over the near-dup pair graph.
+    * Output: (node, cluster) where cluster = the min doc id reachable
+    * through pairs, one row per distinct endpoint. An edge with a null
+    * endpoint joins nothing: its other endpoint is still a node, and a
+    * null endpoint adds one (null, null) row.
+    *
+    * The edge list is pinned first (one count job), because `pairs` is
+    * usually a whole candidate pipeline (ngram/minhash) that must run
+    * once. Its pinned size then picks one of two ways, by the rule Spark
+    * uses before collecting a join side to the driver for a broadcast:
+    *
+    *  - at most `spark.sql.autoBroadcastJoinThreshold` bytes (and ≤ 0
+    *    turns this way off), with both id columns of one integral type:
+    *    collect the edges and run union-find on the driver over primitive
+    *    arrays — one collect job, and the output is a local relation
+    *    that holds no pin. Near-dup graphs are sparse (a few edges per
+    *    duplicated doc), so this is the common case.
+    *  - otherwise min-label propagation rounds until fixpoint, bounded by
+    *    `maxIters`. A round joins both ends of every edge to their
+    *    labels, aggregates the neighbour minimum per node and per label
+    *    node, and joins it back; a pointer-jumping self-join of that
+    *    result (both sides recompute it) shortcuts label chains; then a
+    *    checkpoint of the new labels and a separate convergence join
+    *    against the old. That is about ten Spark jobs a round, and every
+    *    graph takes at least two. Rounds grow with log(size): a
+    *    3,200-node path with shuffled ids takes 11–12. The checkpoint
+    *    truncates the lineage so round N does not replan rounds 1..N-1,
+    *    and the superseded round releases at once; the output is the
+    *    last round's kept checkpoint.
     */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
                           maxIters: Int = 20): DataFrame = pinned { pins =>
-    // `pairs` is usually a whole candidate pipeline (ngram/minhash);
-    // referencing it from both union branches would derive it twice
-    // inside the one eager checkpoint — materialize the slim edge list
-    // first, reverse the cached rows, release once edges are pinned
     val p = pins.once(pairs.select(col(idA).as("src"), col(idB).as("dst")))
+    val threshold = p.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val integralIds = Seq("src", "dst").map(p.schema(_).dataType).distinct match {
+      case Seq(ByteType | ShortType | IntegerType | LongType) => true
+      case _ => false
+    }
+    if (threshold > 0 && integralIds &&
+        p.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold) unionFind(p)
+    else labelRounds(pins, p, maxIters)
+  }
+
+  /** [[connectedComponents]] on the driver: the collected (src, dst)
+    * edges, ids sorted into one primitive array and unioned by index
+    * with the smaller root kept, so every root is its set's min id.
+    */
+  private def unionFind(edges: DataFrame): DataFrame = {
+    val rows = edges.collect()
+    val ends = new scala.collection.mutable.ArrayBuilder.ofLong
+    var nullEnd = false
+    for (r <- rows; i <- 0 to 1)
+      if (r.isNullAt(i)) nullEnd = true else ends += r.getAs[Number](i).longValue
+    val ids = ends.result()
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (i <- ids.indices) if (n == 0 || ids(n - 1) != ids(i)) { ids(n) = ids(i); n += 1 }
+    def index(r: Row, i: Int): Int =
+      java.util.Arrays.binarySearch(ids, 0, n, r.getAs[Number](i).longValue)
+    val parent = Array.range(0, n)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    for (r <- rows if !r.isNullAt(0) && !r.isNullAt(1)) {
+      val a = find(index(r, 0))
+      val b = find(index(r, 1))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val idType = edges.schema("src").dataType
+    val box: Long => Any = idType match {
+      case ByteType => _.toByte
+      case ShortType => _.toShort
+      case IntegerType => _.toInt
+      case _ => identity
+    }
+    val out = new java.util.ArrayList[Row](n + 1)
+    for (i <- 0 until n) out.add(Row(box(ids(i)), box(ids(find(i)))))
+    if (nullEnd) out.add(Row(null, null))
+    // the rounds' schema: both columns take the edge list's id type and
+    // are nullable when either id column is
+    val nullable = edges.schema("src").nullable || edges.schema("dst").nullable
+    edges.sparkSession.createDataFrame(out, StructType(Seq(
+      StructField("node", idType, nullable), StructField("cluster", idType, nullable))))
+  }
+
+  /** [[connectedComponents]] as min-label propagation rounds over the
+    * pinned edge list `p`; the output is the kept last-round checkpoint.
+    */
+  private def labelRounds(pins: Partitioning.Pins, p: DataFrame, maxIters: Int): DataFrame = {
+    // reverse the cached rows; release once edges are pinned
     val edges = pins.checkpoint(
       p.union(p.select(col("dst").as("src"), col("src").as("dst"))))
     pins.release(p)
@@ -330,15 +407,21 @@ object Dedup {
     var i = 0
     var converged = false
     while (!converged && i < maxIters) {
-      val nbr = edges.join(labels, edges("dst") === labels("node"))
-        .groupBy(col("src")).agg(min(col("cluster")).as("nbr_cluster"))
+      // Root hooking: the smallest neighbour label reaches both the node
+      // and the node its label names, so a whole label tree moves as one.
+      // Messages to the node alone move a label about one hop a round: a
+      // path with shuffled ids then needs ~n/3 rounds (11–23 at 40 nodes).
+      val nbr = edges
+        .join(labels.select(col("node").as("src"), col("cluster").as("src_cluster")), "src")
+        .join(labels.select(col("node").as("dst"), col("cluster").as("dst_cluster")), "dst")
+        .select(explode(array(col("src"), col("src_cluster"))).as("src"), col("dst_cluster"))
+        .groupBy(col("src")).agg(min(col("dst_cluster")).as("nbr_cluster"))
       val viaEdges = labels.join(nbr, labels("node") === nbr("src"), "left")
         .select(labels("node"),
           least(labels("cluster"), coalesce(col("nbr_cluster"), labels("cluster"))).as("cluster"))
       // Pointer jumping: also adopt the label OF my current label (labels
-      // join labels). Plain edge propagation needs diameter iterations; the
-      // compression step makes label depth halve each round — O(log d)
-      // convergence, so maxIters=20 covers diameters up to ~2^20.
+      // join labels). Plain edge propagation needs diameter iterations;
+      // with root hooking, this compression keeps rounds logarithmic.
       val viaLabels = viaEdges.as("x")
         .join(viaEdges.select(col("node").as("ln"), col("cluster").as("lc")).as("y"),
           col("x.cluster") === col("y.ln"), "left")

@@ -558,8 +558,9 @@ object SimilaritySearch {
     * keep).
     *
     * Scale shape: the pair stage is [[semanticDedupPairs]]; grouping is
-    * pointer-jumping label propagation (O(log diameter) joins, ids
-    * only); the decision is one row_number window partitioned by
+    * [[graft.operators.dedup.Dedup.connectedComponents]] (driver
+    * union-find for a broadcast-sized pair list, else pointer-jumping
+    * rounds of O(log diameter) joins, ids only); the decision is one row_number window partitioned by
     * cluster — singletons keep their own id as the partition key, so
     * the unpaired bulk of the corpus never funnels into one task.
     */

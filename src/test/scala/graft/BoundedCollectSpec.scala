@@ -50,9 +50,10 @@ class BoundedCollectSpec extends SparkSpec {
   test("connectedComponents converges via pointer jumping on a long chain") {
     // A 40-node path graph has diameter 39 > maxIters=20: plain edge
     // propagation would exit unconverged (and now throw); pointer
-    // jumping converges in O(log d) rounds.
+    // jumping converges in O(log d) rounds. Broadcasts off: a graph this
+    // small otherwise takes the driver union-find path, not the rounds.
     val pairs = (0L until 39L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val labels = graft.operators.dedup.Dedup.connectedComponents(pairs)
+    val labels = withoutBroadcast(graft.operators.dedup.Dedup.connectedComponents(pairs))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.size == 40)
     assert(labels.values.forall(_ == 0L), "every chain node must reach cluster 0")

@@ -56,6 +56,25 @@ class PartitioningSpec extends SparkSpec {
     }
   }
 
+  private def inGroup[T](group: String)(body: => T): T = {
+    spark.sparkContext.setJobGroup(group, group)
+    try body finally spark.sparkContext.clearJobGroup()
+  }
+
+  /** The ids of the jobs run in `group`. Job events reach the status
+    * tracker in order: once a later marker job is visible, any job the
+    * group started is visible too. */
+  private def jobsIn(group: String): Seq[Int] = {
+    val tracker = spark.sparkContext.statusTracker
+    val marker = s"$group-marker"
+    if (tracker.getJobIdsForGroup(marker).isEmpty) inGroup(marker)(spark.range(1).count())
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (tracker.getJobIdsForGroup(marker).isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    assert(tracker.getJobIdsForGroup(marker).nonEmpty)
+    tracker.getJobIdsForGroup(group).toSeq.sorted
+  }
+
   private def persistentIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   private def checkpointRddId(df: org.apache.spark.sql.DataFrame): Int =
@@ -107,11 +126,31 @@ class PartitioningSpec extends SparkSpec {
     assert(ranks.count() == 5L)
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (7L, 8L)).toDF("id_a", "id_b")
     val before2 = persistentIds
-    val labels = graft.operators.dedup.Dedup.connectedComponents(pairs)
+    // the label rounds: a small graph takes union-find unless broadcasts are off
+    val labels = withoutBroadcast(Dedup.connectedComponents(pairs))
     assert(persistentIds -- before2 == Set(checkpointRddId(labels)),
       "connectedComponents must release its edge pins and superseded label rounds")
     assert(labels.as[(Long, Long)].collect().toMap ==
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 7L -> 7L, 8L -> 7L))
+  }
+
+  test("connectedComponents' union-find pins nothing and adds one job to its edge pin") {
+    import spark.implicits._
+    val cm = spark.sharedState.cacheManager
+    // the pair list carries an exchange, as a pair pipeline does
+    val pairs = spark.range(0, 400).groupBy((col("id") % 100).as("id_a"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("id_a"), (col("id_a") + 1).as("id_b"))
+    cm.clearCache()
+    val before = persistentIds
+    val labels = inGroup("cc-small")(Dedup.connectedComponents(pairs))
+    assert(cm.isEmpty, "union-find must release the edge-list pin")
+    assert(persistentIds -- before == Set.empty, "union-find must leave no block RDD")
+    // the count that pins the edge list, then one collect reads it back
+    inGroup("cc-pin")(Partitioning.pinned(_.once(pairs.select(col("id_a"), col("id_b")))))
+    assert(jobsIn("cc-small").size == jobsIn("cc-pin").size + 1,
+      s"jobs: ${jobsIn("cc-small")} against the pin's ${jobsIn("cc-pin")}")
+    assert(labels.as[(Long, Long)].collect().toSet == (0L to 100L).map(_ -> 0L).toSet)
   }
 
   test("building an operator's lazy frame over an exchange-fed input runs no Spark job") {
@@ -122,25 +161,12 @@ class PartitioningSpec extends SparkSpec {
     val kept = spark.range(0, 120).groupBy((col("id") % 40).as("doc_id")).agg(count(lit(1)).as("n"))
     val train = docs.join(kept, Seq("doc_id"), "left_semi")
     val eval = docs.filter(col("doc_id") >= 40)
-    val sc = spark.sparkContext
-    def inGroup[T](group: String)(body: => T): T = {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-    }
     val built = inGroup("lazy-build") {
       Seq(Contamination.evalOverlap(train, eval, "doc_id", "text", n = 3, minOverlap = 0.1),
         TextAnalysis.profile(train, "doc_id", "text"),
         Dedup.ngramJaccardPairs(train, "doc_id", "text", n = 3, threshold = 0.5))
     }
-    // job events reach the status tracker in order: once a later marker
-    // job is visible, any job the build started is visible too
-    inGroup("lazy-build-marker")(spark.range(1).count())
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (sc.statusTracker.getJobIdsForGroup("lazy-build-marker").isEmpty &&
-      System.nanoTime() < deadline) Thread.sleep(10)
-    assert(sc.statusTracker.getJobIdsForGroup("lazy-build-marker").nonEmpty)
-    assert(sc.statusTracker.getJobIdsForGroup("lazy-build").isEmpty,
-      s"jobs run while building: ${sc.statusTracker.getJobIdsForGroup("lazy-build").toSeq}")
+    assert(jobsIn("lazy-build").isEmpty, s"jobs run while building: ${jobsIn("lazy-build")}")
     // the frames still run: the 40 joined train docs profile one row each
     assert(built(1).count() == 40)
     assert(built(0).count() > 0 && built(2).count() > 0)
