@@ -2083,7 +2083,7 @@ object SparkEntry {
     "corpus_report" -> ((s, dir) => {
       // per-source corpus health: the monitoring dashboard a curation
       // pipeline watches. The hashed output is integer-only (micro-units):
-      // per-doc quality is already quantized to 6 decimals (TextProfile
+      // per-doc quality is already quantized to 6 decimals (TextProfileUtil
       // round6), so round(quality*1e6) sits within ~1e-4 of an integer —
       // no rounding boundary any engine version can land on differently,
       // and no DOUBLE or DECIMAL cast survives into the hashed columns.

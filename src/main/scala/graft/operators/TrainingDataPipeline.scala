@@ -10,7 +10,7 @@ import graft.operators.text.TextAnalysis
 /** The end-to-end training-data curation flow (SURVEY.md §8), composed
   * from the engine's verified operators:
   *
-  *   1. profile + quality/language gate (one-pass TextProfile);
+  *   1. profile + quality/language gate (one-pass text profile);
   *   2. exact dedup on the normalized-content fingerprint
   *      (min-id representative per hash — one shuffle);
   *   3. near-dup pair detection among survivors (n-gram Jaccard,
@@ -48,20 +48,22 @@ object TrainingDataPipeline {
     * survivors instead of re-deriving the gate+fingerprint subtree),
     * is released after, and the returned frame's lineage is the written
     * files — recomputable, pin-free, and one full corpus pass cheaper
-    * than `curate(...).write` at 100 TB.
+    * than `curate(...).write` at 100 TB. The files are read back with
+    * the written schema: inferring it would run one more job per call.
     */
   def curateTo(docs: DataFrame, idCol: String, textCol: String, outPath: String,
                minQuality: Double = 0.5, jaccardThreshold: Double = 0.5,
                shingleN: Int = 3, maxShingleDf: Int = 1000,
                mode: String = "overwrite"): DataFrame = {
-    pinned { pins =>
+    val written = pinned { pins =>
       val (uniq, dropIds) = curateStages(pins, docs, idCol, textCol,
         minQuality, jaccardThreshold, shingleN, maxShingleDf)
-      uniq.join(dropIds, uniq(idCol) === dropIds("__drop"), "left_anti")
+      val out = uniq.join(dropIds, uniq(idCol) === dropIds("__drop"), "left_anti")
         .select(col(idCol), col("lang_pred"), col("quality"))
-        .write.mode(mode).parquet(outPath)
+      out.write.mode(mode).parquet(outPath)
+      out.schema
     }
-    docs.sparkSession.read.parquet(outPath)
+    docs.sparkSession.read.schema(written).parquet(outPath)
   }
 
   /** Steps 1–4 shared by [[curate]] and [[curateTo]]: returns the

@@ -18,7 +18,7 @@ object Dedup {
   /** Normalized text used by every textual dedup: lowercase, collapse
     * whitespace, then trim (collapse-first so trailing tabs/newlines
     * reduce to a trimmable space — `trim` alone only strips ' ').
-    * Runs as the native one-pass [[graft.plans.NormTextExpr]] —
+    * Runs as the native one-pass [[graft.plans.NormTextUtil]] —
     * bit-identical to `lower(trim(regexp_replace(c, "\s+", " ")))`
     * (DedupSpec pins it), which is what the DuckDB oracles reproduce,
     * without the regex engine walking every document.
@@ -52,7 +52,7 @@ object Dedup {
                      wordsPerPara: Int = 10): DataFrame = {
     require(wordsPerPara > 0, "paragraph size must be positive")
     import org.apache.spark.sql.expressions.Window
-    // native one-pass blocking ([[graft.plans.ParagraphBlocks]]): the
+    // native one-pass blocking ([[graft.plans.ParagraphUtil]]): the
     // HOF transform/slice formulation re-splits the text per paragraph
     // (interpreted lambda) — 6.6× slower at the 50× probe corpus
     val paras = call_function("graft_paragraphs", col(textCol), lit(wordsPerPara))
@@ -66,7 +66,7 @@ object Dedup {
   }
 
   /** Word n-gram shingles of the normalized text, distinct per doc —
-    * the native one-pass [[graft.plans.WordShingles]] expression
+    * the native one-pass [[graft.plans.ShingleUtil]] kernel
     * (registered by GraftSession). The HOF formulation it replaces was
     * quadratic: interpreted lambdas re-evaluated the duplicated
     * `split(regexp_replace(...))` subtree per element.
@@ -75,7 +75,7 @@ object Dedup {
     call_function("graft_shingles", textCol, lit(n))
 
   /** Distinct shingles pre-reduced to their xxhash64 values inside the
-    * scan stage ([[graft.plans.WordShingleHashes]]) — the dedup
+    * scan stage ([[graft.plans.ShingleHashUtil]]) — the dedup
     * candidate generators explode these 8-byte longs instead of
     * materializing every shingle string through the explode just to
     * hash it on the next line. Bit-identical to

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
 object SimHashDedup {
 
   /** 64-bit simhash of a token array — the native one-pass
-    * [[graft.plans.SimHash64]] expression (registered by GraftSession).
+    * [[graft.plans.SimHashUtil]] kernel (registered by GraftSession).
     */
   def simhash(tokens: Column): Column =
     call_function("graft_simhash64", tokens)

@@ -62,7 +62,7 @@ object Bm25 {
     */
   def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val nonNull = docs.filter(col(textCol).isNotNull)
-    // (dl, term, tf) fused in-row ([[graft.plans.TermFreqs]]): the old
+    // (dl, term, tf) fused in-row ([[graft.plans.TermFreqsUtil]]): the old
     // size(tokens) + explode(tokens) → groupBy(doc_id, dl, term) chain
     // tokenized every document twice and shuffled per-OCCURRENCE rows
     // into an aggregation whose groups were per-document anyway —

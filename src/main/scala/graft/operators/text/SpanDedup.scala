@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape (the 100 TB argument):
   *  - the scan emits positional 8-byte window hashes via the native
-  *    [[graft.plans.SpanHashes]] expression — window STRINGS never
+  *    [[graft.plans.SpanHashUtil]] kernel — window STRINGS never
   *    leave the scan stage;
   *  - duplication is a window count over the hash partition (one
   *    shuffle of (id, pos, hash) triples, map-side width fixed) — the

@@ -18,7 +18,7 @@ object TextAnalysis {
 
   /** Engine-native one-pass twin of
     * `lower(trim(regexp_replace(c, "\s+", " ")))` — DedupSpec pins the
-    * bit-equivalence ([[graft.plans.NormTextExpr]]); removes the regex
+    * bit-equivalence ([[graft.plans.NormTextUtil]]); removes the regex
     * engine from every tokenizing consumer (BM25 postings, TF-IDF,
     * Zipf, vocab coverage, the bigram LM).
     */
@@ -597,7 +597,7 @@ object TextAnalysis {
 
   /** Gopher-style rule gate (Rae et al. 2021, appendix A1.1): the
     * standard heuristic quality filter for pretraining corpora. Each
-    * rule thresholds one of the native [[graft.plans.GopherStats]]
+    * rule thresholds one of the native [[graft.plans.GopherStatsUtil]]
     * integer counts, and every threshold is evaluated as an EXACT
     * integer comparison (`mean word length in [3,10]` becomes
     * `3·n ≤ Σlen ≤ 10·n`) — no float ever decides a rule, so the gate
@@ -692,7 +692,7 @@ object TextAnalysis {
   }
 
   /** One-call enrichment used by the `text_profile` query — the native
-    * one-pass [[graft.plans.TextProfile]] expression (the composable
+    * one-pass [[graft.plans.TextProfileUtil]] kernel (the composable
     * Column formulas above re-run the tokenize subtree once per output
     * column; they remain available for à-la-carte use).
     */

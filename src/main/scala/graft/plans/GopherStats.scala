@@ -3,9 +3,6 @@ package graft.plans
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -28,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *   n_req_stop    DISTINCT hits among the 8 Gopher required stopwords
   *                 (the, be, to, of, and, that, have, with)
   *
-  * Fused for the same reason as [[TextProfile]]: the composable Column
+  * Fused for the same reason as [[TextProfileUtil]]: the composable Column
   * forms re-tokenize once per output column. Every count is
   * reproducible in ANSI SQL over list ops, so the DuckDB oracle covers
   * the whole gate.
@@ -106,26 +103,4 @@ object GopherStatsUtil {
     StructField("n_alpha_words", LongType, nullable = false),
     StructField("n_req_stop", LongType, nullable = false)
   ))
-}
-
-/** Native Catalyst expression: Gopher gate raw counts as one struct. */
-case class GopherStats(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_gopher_stats needs a string argument, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = GopherStatsUtil.schema
-
-  override def prettyName: String = "graft_gopher_stats"
-
-  override def nullSafeEval(t: Any): Any =
-    GopherStatsUtil.computeMemo(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GopherStatsUtil.computeMemo($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

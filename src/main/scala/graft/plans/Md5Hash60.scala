@@ -1,9 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** First 60 bits of md5(s) as a non-negative long — the fused form of
@@ -35,26 +31,4 @@ object Md5Util {
       ((digest(6) & 0xffL) << 8) | (digest(7) & 0xffL)
     v >>> 4
   }
-}
-
-case class Md5Hash60(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_md5_60 needs string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = LongType
-
-  override def prettyName: String = "graft_md5_60"
-
-  override def nullSafeEval(input: Any): Any =
-    Md5Util.top60(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Md5Util.top60($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Md5Hash60 =
-    copy(child = newChild)
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The single source of truth for "Spark-exact normText semantics"
-  * shared by the native text expressions ([[TextProfile]],
-  * [[GopherStats]]): `lower(trim(regexp_replace(text, "\s+", " ")))`
+  * shared by the native text kernels ([[TextProfileUtil]],
+  * [[GopherStatsUtil]]): `lower(trim(regexp_replace(text, "\s+", " ")))`
   * with Java-regex whitespace (NB: Java `\s` includes U+000B vertical
   * tab, RE2's does not — DuckDB oracles therefore collapse
   * `[\s\x0b]+`), space-only trim, ICU lowercase.
@@ -69,35 +69,6 @@ object NormTextUtil {
     // a trailing run appends nothing (trim-right)
     UTF8String.fromString(sb.toString).toLowerCase
   }
-}
-
-/** Catalyst expression for [[NormTextUtil.norm]]. */
-final case class NormTextExpr(
-    child: org.apache.spark.sql.catalyst.expressions.Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-  import org.apache.spark.sql.types.{DataType, StringType}
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_norm_text needs string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = StringType
-
-  override def prettyName: String = "graft_norm_text"
-
-  override def nullSafeEval(input: Any): Any =
-    NormTextUtil.norm(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NormTextUtil.norm($c)")
-
-  override protected def withNewChildInternal(
-      newChild: org.apache.spark.sql.catalyst.expressions.Expression): NormTextExpr =
-    copy(child = newChild)
 }
 
 /** Thread-local (input, result) memo for pure one-pass text

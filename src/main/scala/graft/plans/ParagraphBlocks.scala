@@ -1,10 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared eval/codegen helper (static-callable from Janino). */
@@ -49,35 +45,4 @@ object ParagraphUtil {
     }
     new GenericArrayData(out)
   }
-}
-
-/** Native Catalyst expression for paragraph blocking (sub-document
-  * dedup's hot inner loop) — same design rationale as [[WordShingles]]:
-  * the composable HOF formulation interprets its lambda and re-splits
-  * the text once per paragraph; this is one linear pass inside
-  * whole-stage codegen.
-  */
-case class ParagraphBlocks(child: Expression, n: Int, stride: Int)
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType && n >= 1 && stride >= 1 && stride <= n)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_paragraphs/graft_word_windows need (string, n>=1, 1<=stride<=n), " +
-        s"got ${child.dataType.simpleString}, n=$n, stride=$stride")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def prettyName: String =
-    if (stride == n) "graft_paragraphs" else "graft_word_windows"
-
-  override def nullSafeEval(t: Any): Any =
-    ParagraphUtil.windows(t.asInstanceOf[UTF8String], n, stride)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.ParagraphUtil.windows($c, $n, $stride)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

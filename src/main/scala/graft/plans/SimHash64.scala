@@ -1,10 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 
 /** One-pass 64-bit SimHash (Charikar) of a token array — bit b of the
   * fingerprint is the sign of Σ_tokens (±1 from bit b of the token's
@@ -38,26 +35,4 @@ object SimHashUtil {
     }
     fp
   }
-}
-
-case class SimHash64(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_simhash64 needs array<string>, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = LongType
-
-  override def prettyName: String = "graft_simhash64"
-
-  override def nullSafeEval(a: Any): Any =
-    SimHashUtil.simhash64(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.SimHashUtil.simhash64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

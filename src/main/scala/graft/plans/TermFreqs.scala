@@ -1,9 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -72,26 +69,4 @@ object TermFreqsUtil {
       StructField("tf", LongType, nullable = false)
     )), containsNull = false), nullable = false)
   ))
-}
-
-/** Native Catalyst expression: `(dl, [(term, tf)])` as one struct. */
-case class TermFreqs(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_term_freqs needs a string argument, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = TermFreqsUtil.schema
-
-  override def prettyName: String = "graft_term_freqs"
-
-  override def nullSafeEval(t: Any): Any =
-    TermFreqsUtil.computeMemo(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TermFreqsUtil.computeMemo($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

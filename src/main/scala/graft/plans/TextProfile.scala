@@ -1,9 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -127,26 +124,4 @@ object TextProfileUtil {
     StructField("lang_pred", StringType, nullable = false),
     StructField("fingerprint", StringType, nullable = false)
   ))
-}
-
-/** Native Catalyst expression: full text profile as one struct. */
-case class TextProfile(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_text_profile needs a string argument, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = TextProfileUtil.schema
-
-  override def prettyName: String = "graft_text_profile"
-
-  override def nullSafeEval(t: Any): Any =
-    TextProfileUtil.computeMemo(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextProfileUtil.computeMemo($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

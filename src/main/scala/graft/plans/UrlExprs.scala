@@ -1,9 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd URL functions: [[graft.functions.UrlOps]] behind native
@@ -36,80 +32,12 @@ object UrlUtil {
   }
 
   /** CDX SURT key ([[graft.functions.UrlOps.surtKey]]); null when the
-    * input has no scheme/authority.
+    * input has no scheme/authority. CDX generation runs this once per
+    * archived record and the index build sorts on it, so it must stay
+    * inside whole-stage codegen.
     */
   def surtOrNull(s: UTF8String): UTF8String = {
     try UTF8String.fromString(graft.functions.UrlOps.surtKey(s.toString))
     catch { case _: IllegalArgumentException => null }
   }
-}
-
-abstract class UrlStringExpr extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${other.simpleString}")
-  }
-  override def dataType: DataType = StringType
-}
-
-/** `graft_url_normalize(url)` — full syntax normalization, null on
-  * malformed input.
-  */
-case class UrlNormalize(child: Expression) extends UrlStringExpr {
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_url_normalize"
-  override def nullSafeEval(input: Any): Any =
-    UrlUtil.normalizeOrNull(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val code = nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.plans.UrlUtil.normalizeOrNull($c);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }""".stripMargin)
-    code
-  }
-  override protected def withNewChildInternal(newChild: Expression): UrlNormalize =
-    copy(child = newChild)
-}
-
-/** `graft_url_host(url)` — IDNA-folded host, null on malformed input. */
-case class UrlHost(child: Expression) extends UrlStringExpr {
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_url_host"
-  override def nullSafeEval(input: Any): Any =
-    UrlUtil.hostOrNull(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.plans.UrlUtil.hostOrNull($c);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }""".stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): UrlHost =
-    copy(child = newChild)
-}
-
-/** `graft_surt(url)` — the CDX SURT sort key, null on malformed input.
-  * Codegen'd for the same reason as the other URL expressions: CDX
-  * generation runs once per archived record and the index build sorts
-  * on this column, so it must stay inside whole-stage codegen.
-  */
-case class UrlSurt(child: Expression) extends UrlStringExpr {
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_surt"
-  override def nullSafeEval(input: Any): Any =
-    UrlUtil.surtOrNull(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.plans.UrlUtil.surtOrNull($c);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }""".stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): UrlSurt =
-    copy(child = newChild)
-}
-
-/** `graft_url_domain(host)` — eTLD+1 of a HOST string. */
-case class UrlDomain(child: Expression) extends UrlStringExpr {
-  override def prettyName: String = "graft_url_domain"
-  override def nullSafeEval(input: Any): Any =
-    UrlUtil.registrableDomain(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.UrlUtil.registrableDomain($c)")
-  override protected def withNewChildInternal(newChild: Expression): UrlDomain =
-    copy(child = newChild)
 }

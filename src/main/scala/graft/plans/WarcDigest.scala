@@ -1,9 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** WARC payload digest: `sha1:` + RFC 4648 Base32 of the SHA-1 — the
@@ -72,29 +68,12 @@ object WarcDigestUtil {
       UTF8String.fromString("sha1:" + base32(md.digest()))
     }
   }
-}
 
-/** `graft_warc_digest(payload[, httpBody])` — WARC-Payload-Digest of a
-  * binary column, inside whole-stage codegen. With `httpBody = true`
-  * (a plan-time boolean literal) the digest covers only the HTTP
-  * entity body — the spelling that matches digests carried by real
-  * crawl archives for `application/http` response records.
-  */
-case class WarcPayloadDigest(child: Expression, httpBody: Boolean = false)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${other.simpleString}")
-  }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_warc_digest"
-  override def nullSafeEval(input: Any): Any =
-    if (httpBody) WarcDigestUtil.httpPayloadDigest(input.asInstanceOf[Array[Byte]])
-    else WarcDigestUtil.digest(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (httpBody) defineCodeGen(ctx, ev, c => s"graft.plans.WarcDigestUtil.httpPayloadDigest($c)")
-    else defineCodeGen(ctx, ev, c => s"graft.plans.WarcDigestUtil.digest($c)")
-  override protected def withNewChildInternal(newChild: Expression): WarcPayloadDigest =
-    copy(child = newChild)
+  /** `graft_warc_digest(payload[, httpBody])`: with `httpBody` (a
+    * plan-time boolean literal) the digest covers only the HTTP entity
+    * body — the spelling that matches digests carried by real crawl
+    * archives for `application/http` response records.
+    */
+  def payloadDigest(payload: Array[Byte], httpBody: Boolean): UTF8String =
+    if (httpBody) httpPayloadDigest(payload) else digest(payload)
 }

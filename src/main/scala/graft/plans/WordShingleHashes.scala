@@ -1,10 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused shingle-and-hash: the distinct word n-gram shingles of the
@@ -137,67 +134,4 @@ object MinHashMd5Util {
     }
     new GenericArrayData(buf.map(x => x: Any))
   }
-}
-
-case class WordMinHashMd5(child: Expression, n: Int, k: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType && n >= 1 && k >= 1) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_minhash_md5 needs (string, n>=1, k>=1), got ${child.dataType.simpleString}, n=$n, k=$k")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "graft_minhash_md5"
-
-  override def nullSafeEval(t: Any): Any =
-    MinHashMd5Util.sigPortable(t.asInstanceOf[UTF8String], n, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.MinHashMd5Util.sigPortable($c, $n, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class WordShingleMd5s(child: Expression, n: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType && n >= 1) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_shingle_md5_60 needs (string, n>=1), got ${child.dataType.simpleString}, n=$n")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "graft_shingle_md5_60"
-
-  override def nullSafeEval(t: Any): Any =
-    ShingleMd5Util.shingleMd5s(t.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.ShingleMd5Util.shingleMd5s($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class WordShingleHashes(child: Expression, n: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType && n >= 1) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_shingle_hashes needs (string, n>=1), got ${child.dataType.simpleString}, n=$n")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "graft_shingle_hashes"
-
-  override def nullSafeEval(t: Any): Any =
-    ShingleHashUtil.shingleHashes(t.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.ShingleHashUtil.shingleHashes($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

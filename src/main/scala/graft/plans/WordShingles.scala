@@ -1,10 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass normalization + word-shingling helper shared by eval and
@@ -74,7 +70,9 @@ object ShingleUtil {
     * `array_distinct(transform(sequence(...), concat_ws over
     * split(lower(trim(regexp_replace(text, "\s+", " "))), " ")))`, in
     * one linear pass instead of an interpreted lambda tree that
-    * re-evaluates the split per element.
+    * re-evaluates the split per element (quadratic at runtime, and
+    * CollapseProject re-inlines the array into every consumer). The hot
+    * inner loop of n-gram Jaccard and MinHash dedup (SURVEY.md §8).
     */
   def shingles(text: UTF8String, n: Int): ArrayData = {
     val seen = distinctShingles(text, n)
@@ -84,35 +82,4 @@ object ShingleUtil {
     while (it.hasNext) { out(j) = UTF8String.fromString(it.next()); j += 1 }
     new GenericArrayData(out)
   }
-}
-
-/** Native Catalyst expression for word n-gram shingling (the hot inner
-  * loop of n-gram Jaccard and MinHash dedup, SURVEY.md §8).
-  *
-  * The composable HOF formulation (`transform(sequence(..), i =>
-  * concat_ws(element_at(words, i)..))`) is quadratic at runtime: higher-
-  * order functions are interpreted, so every element re-evaluates the
-  * duplicated `split(regexp_replace(...))` subtree — and CollapseProject
-  * happily re-inlines the array into every consumer. This expression is
-  * one linear pass with full codegen support.
-  */
-case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType && n >= 1) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_shingles needs (string, n>=1), got ${child.dataType.simpleString}, n=$n")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def prettyName: String = "graft_shingles"
-
-  override def nullSafeEval(t: Any): Any =
-    ShingleUtil.shingles(t.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.ShingleUtil.shingles($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -31,6 +31,10 @@ import graft.streaming.UpsertSink
   *      The rollback undoes rows AND ledger marker together, so a retry
   *      replays the identical transaction — exactly-once is preserved.
   *
+  * Batches carry the CDC schema ([[graft.sources.CdcFileSource.schema]]):
+  * rows are keyed by `key`, ordered by `seq`, typed by `op`, and ledgered
+  * by `gtid` when that column is present.
+  *
   * Connection management is pluggable so tests can run against any
   * JDBC target; no driver classes are referenced statically.
   */
@@ -39,10 +43,6 @@ class JdbcUpsertSink(
     table: SqlBuilder.TableDef,
     jobId: String,
     ledgerSchema: String,
-    keyCol: String = "key",
-    seqCol: String = "seq",
-    opCol: String = "op",
-    gtidCol: String = "gtid",
     numPartitions: Int = 4,
     compactThreshold: Int = 2048,
     bulkTiers: Seq[Int] = SqlBuilder.bulkTiers,
@@ -61,12 +61,12 @@ class JdbcUpsertSink(
     }
 
     val ordered = batch
-      .repartition(numPartitions, col(keyCol))
-      .sortWithinPartitions(col(seqCol))
+      .repartition(numPartitions, col("key"))
+      .sortWithinPartitions(col("seq"))
 
     val tableDef = table
     val lSchema = ledgerSchema
-    val (job, oc, gc) = (jobId, opCol, gtidCol)
+    val job = jobId
     val connectF = connect
     val tiers = SqlBuilder.normalizeTiers(bulkTiers)
     val setup = sessionSetup
@@ -91,7 +91,7 @@ class JdbcUpsertSink(
           // connection; a retried tx must not reuse a possibly-poisoned one
           val cache = new StatementCache(conn)
           try {
-            JdbcUpsertSink.applyRows(buffered, cache, tableDef, job, lSchema, oc, gc, tiers)
+            JdbcUpsertSink.applyRows(buffered, cache, tableDef, job, lSchema, tiers)
             conn.commit()
           } finally cache.close()
         }
@@ -179,16 +179,14 @@ object JdbcUpsertSink {
       tableDef: SqlBuilder.TableDef,
       job: String,
       lSchema: String,
-      oc: String,
-      gc: String,
       tiers: Seq[Int] = SqlBuilder.bulkTiers): Unit = {
     // every row of a partition shares one schema: resolve fields once
     val schema = buffered(0).schema
     val colIdx = tableDef.columns.map(schema.fieldIndex).toArray
     val whereIdx = (if (tableDef.hasPk) tableDef.pkColumns else tableDef.columns)
       .map(schema.fieldIndex).toArray
-    val opIdx = schema.fieldIndex(oc)
-    val gtidIdx = schema.fieldNames.indexOf(gc)
+    val opIdx = schema.fieldIndex("op")
+    val gtidIdx = schema.fieldNames.indexOf("gtid")
     def isDelete(r: Row): Boolean = r.getString(opIdx) == "d" // c/u/r → replace
 
     def bind(st: PreparedStatement, values: Iterator[Any]): Unit = {

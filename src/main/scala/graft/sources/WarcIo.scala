@@ -636,7 +636,7 @@ object WarcIo {
 
   /** WARC-Payload-Digest spelling: `sha1:` + unpadded RFC 4648 Base32
     * (what public crawl corpora carry). Columnar twin:
-    * `graft_warc_digest` ([[graft.plans.WarcPayloadDigest]]).
+    * `graft_warc_digest` ([[graft.plans.WarcDigestUtil]]).
     */
   def payloadDigest(payload: Array[Byte]): String =
     graft.plans.WarcDigestUtil.digest(payload).toString

@@ -56,25 +56,6 @@ class PartitioningSpec extends SparkSpec {
     }
   }
 
-  private def inGroup[T](group: String)(body: => T): T = {
-    spark.sparkContext.setJobGroup(group, group)
-    try body finally spark.sparkContext.clearJobGroup()
-  }
-
-  /** The ids of the jobs run in `group`. Job events reach the status
-    * tracker in order: once a later marker job is visible, any job the
-    * group started is visible too. */
-  private def jobsIn(group: String): Seq[Int] = {
-    val tracker = spark.sparkContext.statusTracker
-    val marker = s"$group-marker"
-    if (tracker.getJobIdsForGroup(marker).isEmpty) inGroup(marker)(spark.range(1).count())
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (tracker.getJobIdsForGroup(marker).isEmpty && System.nanoTime() < deadline)
-      Thread.sleep(10)
-    assert(tracker.getJobIdsForGroup(marker).nonEmpty)
-    tracker.getJobIdsForGroup(group).toSeq.sorted
-  }
-
   private def persistentIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   private def checkpointRddId(df: org.apache.spark.sql.DataFrame): Int =

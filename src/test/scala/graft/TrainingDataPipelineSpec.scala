@@ -48,6 +48,33 @@ class TrainingDataPipelineSpec extends SparkSpec {
     assert(spark.read.parquet(outDir).count() == viaWrite.count())
   }
 
+  test("curateTo: reads its output back with the written schema, not a schema-inference job") {
+    import spark.implicits._
+    val docs = Seq(
+      (1L, "The quick brown fox jumps over the lazy dog and it is fine. " * 5),
+      (2L, "Der Hund ist nicht zu Hause und das ist auch gut so heute. " * 5)
+    ).toDF("doc_id", "text")
+    val outDir = TempDirs.scratch("curate_to_schema_") + "/corpus"
+    val viaWrite = inGroup("curate-to-schema")(TrainingDataPipeline.curateTo(docs, "doc_id", "text",
+      outDir, minQuality = 0.5, jaccardThreshold = 0.5))
+    val inferred = inGroup("curate-to-infer")(spark.read.parquet(outDir))
+    assert(viaWrite.schema == inferred.schema)
+    // jobs the status tracker saw, less those of a SQL query execution
+    // (the status store hears job events on the same queue, so it has
+    // caught up once jobsIn has)
+    def outsideQueries(group: String): Seq[Int] = {
+      val ids = jobsIn(group)
+      val inQueries = spark.sharedState.statusStore.executionsList().flatMap(_.jobs.keys).toSet
+      ids.filterNot(inQueries)
+    }
+    // inferring a parquet schema is one job outside any query ...
+    assert(outsideQueries("curate-to-infer").size == 1)
+    // ... which curateTo no longer runs
+    assert(outsideQueries("curate-to-schema").isEmpty,
+      s"curateTo ran jobs outside a query: ${outsideQueries("curate-to-schema")}")
+    assert(viaWrite.select("doc_id").as[Long].collect().toSet == Set(1L, 2L))
+  }
+
   test("curateTo: a failed write releases the working-set pin") {
     import spark.implicits._
     val docs = Seq(
